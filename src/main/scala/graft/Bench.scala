@@ -14,14 +14,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Sessions.withMaster(SparkSession.builder(), cpus)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.graft().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Probe aid: GRAFT_BENCH_CONF="k=v;k2=v2" sets session confs the
     // builder can't know (e.g. graft.q115.adjacencyDir for the fresh-JVM

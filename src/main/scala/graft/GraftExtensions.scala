@@ -7,9 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{BottomK, CountMinAgg, CountMinMergeAgg, FloatVecDot}
 
 /** SparkSessionExtensions entry point: registers the engine's custom
-  * expressions, planner strategies and optimizer rules. Activate with
-  * `.config("spark.sql.extensions", "graft.GraftExtensions")` or
-  * `.withExtensions(new GraftExtensions)`.
+  * expressions, planner strategies and optimizer rules. Every session
+  * `Sessions.graft` builds installs it (`Sessions.withMaster`).
   *
   * SQL surface: `float_vec_dot(a, b)` (codegen'd float-vector dot
   * product), `bottom_k(col, k)` (O(k) bottom-k sketch aggregate),
@@ -20,8 +19,6 @@ import graft.functions.{BottomK, CountMinAgg, CountMinMergeAgg, FloatVecDot}
   * Morton interleave), `pcm_fold(content)` (single-pass PCM WAV
   * sample stats); plus the native as-of
   * join (graft.plans.AsofJoinNode/Exec + its pruning/pushdown rules).
-  * `AsofJoin.backwardNative` also self-registers through
-  * `spark.experimental` for sessions built without this class.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Master selection shared by the runtime mains (Verify / Bench).
+/** The one session builder: every main, tool and spec gets its session
+  * from [[Sessions.graft]], which installs `GraftExtensions` and the
+  * canonical conf. Call sites add only the confs that really differ.
   *
   * `SPARK_GRAFT_MASTER` overrides the default `local[$cpus]` so the
   * SAME correctness sweep the driver runs single-JVM can be replayed
@@ -10,8 +12,8 @@ import org.apache.spark.sql.SparkSession
   * driver↔executor serialization boundaries, the closest local proxy
   * for a multi-node cluster. A local-cluster master spawns executors
   * as fresh processes, so this build's classes and the Java 17 module
-  * opens Spark needs must ride along in executor conf (the same set
-  * `tools.FaultProbe` uses); the caller must export
+  * opens Spark needs must ride along in executor conf; the caller
+  * must export
   * `SPARK_HOME=/opt/spark SPARK_SCALA_VERSION=2.13` so the worker can
   * assemble the executor command line.
   */
@@ -37,13 +39,31 @@ object Sessions {
     "local-cluster\\[\\s*\\d+\\s*,\\s*\\d+\\s*,\\s*(\\d+)\\s*\\]".r
       .findFirstMatchIn(master).map(_.group(1) + "m")
 
-  /** Apply the session master: `SPARK_GRAFT_MASTER` if set (with the
-    * executor classpath/opens conf a local-cluster needs), else the
-    * default `local[$cpus]`. A local-cluster master that does not parse
-    * (and no SPARK_GRAFT_EXECUTOR_MEM) fails LOUDLY rather than letting
+  /** Cores a session is sized to: `SPARK_GRAFT_CPUS`, else the host's. */
+  def hostCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
+  /** A builder with the master, `GraftExtensions` and the canonical conf:
+    * UTC session time, nanos-as-long parquet timestamps, AQE on, no UI,
+    * and one shuffle partition per core. */
+  def graft(cpus: String = hostCpus): SparkSession.Builder =
+    withMaster(SparkSession.builder(), cpus)
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false")
+
+  /** Apply the session master and install `GraftExtensions` (its SQL
+    * functions, the native as-of strategy and its optimizer rules): the
+    * master is `SPARK_GRAFT_MASTER` if set (with the executor
+    * classpath/opens conf a local-cluster needs), else the default
+    * `local[$cpus]`. A local-cluster master that does not parse (and no
+    * SPARK_GRAFT_EXECUTOR_MEM) fails LOUDLY rather than letting
     * executors launch at the 1 GiB default. */
   def withMaster(b: SparkSession.Builder, cpus: String): SparkSession.Builder =
-    applyMaster(b, sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"),
+    applyMaster(b.withExtensions(new GraftExtensions),
+      sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"),
       sys.env.get("SPARK_GRAFT_EXECUTOR_MEM"))
 
   /** The env-free core of [[withMaster]], separated so the sizing

@@ -61,25 +61,16 @@ object AsofJoin {
     * of the two sorted sides per partition instead of a union+window
     * pass over a doubled row stream. Result-identical to [[backward]];
     * key/time columns must be non-null (a violating row fails fast
-    * with the same error on both execution paths). */
+    * with the same error on both execution paths). The session must
+    * have `GraftExtensions` installed, as every `Sessions.graft`
+    * session does, for the node to plan. */
   def backwardNative(leftDf: DataFrame, rightDf: DataFrame, key: String,
                      leftTime: String, rightTime: String, payload: String,
                      asOfCol: String, rightOrder: Seq[String] = Nil): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference}
     import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
-    import graft.plans.{AsofJoinNode, AsofJoinStrategy, PruneAsofRightColumns, PushFilterThroughAsof}
+    import graft.plans.AsofJoinNode
     val spark = leftDf.sparkSession
-    // idempotent registration: the imperative path covers sessions built
-    // without spark.sql.extensions=graft.GraftExtensions
-    if (!spark.experimental.extraStrategies.contains(AsofJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsofJoinStrategy
-    if (!spark.experimental.extraOptimizations.contains(PruneAsofRightColumns))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ PruneAsofRightColumns
-    if (!spark.experimental.extraOptimizations.contains(PushFilterThroughAsof))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ PushFilterThroughAsof
     val l = leftDf.queryExecution.analyzed
     // fresh exprIds on the right so self-joins (both sides from the same
     // source) cannot alias-collide

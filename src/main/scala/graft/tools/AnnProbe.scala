@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
@@ -53,15 +52,9 @@ object AnnProbe {
     require(args.length >= 2, "usage: AnnProbe <outJson> <fixtureDir>...")
     val outPath = args(0)
     val dirs = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val cpus = graft.Sessions.hostCpus
+    val spark = graft.Sessions.graft(cpus)
       .appName("graft-ann-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.TextAnalysis
 
@@ -31,17 +30,11 @@ object BpeProbe {
     val sfDir = args.headOption.getOrElse("/tmp/graft_sf10s")
     val nRules = args.drop(1).headOption.map(_.toInt).getOrElse(50000)
     val trials = args.drop(2).headOption.map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "24")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = graft.Sessions.graft()
       // AQE off: the probe asserts the EXPRESSION's codegen placement,
       // and an AdaptiveSparkPlan exposes no WholeStageCodegen nodes
       // until finalization — this is a one-stage agg, AQE adds nothing
       .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

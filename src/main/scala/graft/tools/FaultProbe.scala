@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Executor-loss fault injection for the batch ITERATIVE family
   * (q48/q59 connected components, q115 PageRank, q124 incremental
   * dedup). The claim under test is the one Lineage.scala makes in
@@ -29,8 +27,6 @@ import org.apache.spark.sql.SparkSession
   * Exit 0 = every query PASS; 1 = any FAIL/UNTESTED.
   */
 object FaultProbe {
-  private val addOpens = graft.Sessions.addOpens
-
   /** The executor JVMs are direct children of this process: the
     * local-cluster Workers run in-process and spawn executors via
     * ProcessBuilder. Match on command line when /proc exposes it
@@ -50,17 +46,9 @@ object FaultProbe {
     val prefixes = args.drop(1).headOption
       .map(_.split(",").map(_.trim).toSeq)
       .getOrElse(Seq("q48", "q59", "q115", "q124"))
-    val spark = SparkSession.builder()
-      .master("local-cluster[2,4,2048]")
+    val spark = graft.Sessions.applyMaster(graft.Sessions.graft("8"),
+        "local-cluster[2,4,2048]", memOverride = Some("1536m"))
       .appName("graft-fault-probe")
-      .config("spark.executor.memory", "1536m")
-      .config("spark.executor.extraClassPath", sys.props("java.class.path"))
-      .config("spark.executor.extraJavaOptions", addOpens)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
       // the claim under test: reliable lineage cuts survive executor loss
       .config("graft.checkpoint.reliable", "true")
       // a killed executor fails its in-flight tasks; allow generous

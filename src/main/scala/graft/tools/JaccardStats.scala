@@ -44,14 +44,7 @@ object JaccardStats {
     val threshold = args.drop(1).headOption.map(_.toDouble).getOrElse(0.8)
     val mult = args.drop(2).headOption.map(_.toInt).getOrElse(100)
     val maxDf = args.drop(3).headOption.map(_.toInt).getOrElse(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "24")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.graft().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val docs = graft.sources.Tables.documents(spark, sfDir)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.AsofJoin
 import graft.sources.Tables
@@ -16,15 +15,9 @@ object MicroBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val mult = args.drop(1).headOption.map(_.toInt).getOrElse(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = graft.Sessions.graft()
       .config("spark.sql.adaptive.enabled",
         sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val ev0 = Tables.events(spark, sfDir)

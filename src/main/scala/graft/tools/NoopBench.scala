@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Noop-sink probe for count-prunable queries.
   *
   * `graft.Bench` times `df.count()`, which is honest for most of the
@@ -24,15 +22,8 @@ import org.apache.spark.sql.SparkSession
 object NoopBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val trials = sys.env.getOrElse("GRAFT_BENCH_TRIALS", "3").toInt.max(1)
-    val spark = graft.Sessions.withMaster(SparkSession.builder(), cpus)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.graft().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val only = sys.env.get("GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     val queries = graft.SparkEntry.queries.toSeq.sortBy(_._1)

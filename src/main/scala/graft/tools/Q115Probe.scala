@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** q115 stage decomposition (optimization r19): attribute the query's
@@ -15,14 +14,8 @@ import org.apache.spark.sql.functions._
 object Q115Probe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.Sessions.withMaster(SparkSession.builder(), cpus)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = graft.Sessions.hostCpus
+    val spark = graft.Sessions.graft(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import graft.queries.AnalyticsQueries
     def segTimes(): Map[String, Double] = {

@@ -72,14 +72,7 @@ object ScaleUp {
     // probe only needs events, and regenerating 9 untouched tables at
     // sf10 is minutes of wasted writes
     val onlyTables = args.drop(4).headOption.map(_.split(",").map(_.trim).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.graft().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try run(spark, src, dst, mult, mode, onlyTables)
     finally spark.stop()

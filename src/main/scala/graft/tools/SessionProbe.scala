@@ -2,7 +2,6 @@ package graft.tools
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** q68 decade probe: times the session-window pipeline under candidate
@@ -33,16 +32,9 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
 object SessionProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/graft_sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val variant = sys.env.getOrElse("GRAFT_SESSION_VARIANT", "baseline")
     val trials = sys.env.getOrElse("GRAFT_BENCH_TRIALS", "3").toInt.max(1)
-    val spark = graft.Sessions.withMaster(SparkSession.builder(), cpus)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.graft().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     variant match {
       case "localmerge" => spark.conf.set(

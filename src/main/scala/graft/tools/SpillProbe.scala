@@ -55,7 +55,7 @@ object SpillProbe {
     val outDir = args(1)
     val poolMb = args(2).toLong
     val prefixes = args(3).split(",").map(_.trim).filter(_.nonEmpty).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = graft.Sessions.hostCpus
 
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => prefixes(n.takeWhile(_ != '_')) }
@@ -70,14 +70,9 @@ object SpillProbe {
       // sibling tasks hold the pool mid-spill); production absorbs that
       // by retrying the task on another executor — default local mode
       // (maxFailures=1) instead kills the job on the first transient.
-      val b = SparkSession.builder()
+      val b = graft.Sessions.graft(cpus)
         .master(s"local[$cpus,4]")
         .appName(if (constrained) "graft-spill-constrained" else "graft-spill-baseline")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
       if (constrained) {
         b.config("spark.testing.memory", (poolMb << 20).toString)
           // the 300 MB production floor would force the pool above the

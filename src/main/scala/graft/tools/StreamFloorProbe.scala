@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -41,15 +41,9 @@ object StreamFloorProbe {
   def main(args: Array[String]): Unit = {
     val outPath = args.headOption.getOrElse("bench/probe_r18_stream_floor.json")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.Sessions.hostCpus
     val trials = sys.env.getOrElse("GRAFT_BENCH_TRIALS", "3").toInt.max(1)
-    val spark = graft.Sessions.withMaster(SparkSession.builder(), cpus)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.graft(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val ev = Tables.events(spark, sfDir)

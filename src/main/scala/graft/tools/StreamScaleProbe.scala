@@ -2,7 +2,6 @@ package graft.tools
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Streaming scale-notch probe: run named stateful queries at the
@@ -30,14 +29,7 @@ object StreamScaleProbe {
     val prefixes = (if (args.length > 1) args(1) else "q52,q90")
       .split(",").map(_.trim).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.Sessions.withMaster(SparkSession.builder(), cpus)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.graft().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // this probe's evidence IS numRowsTotal — opt back into row-count
     // tracking (off by default since r18; see useRocksDbState)

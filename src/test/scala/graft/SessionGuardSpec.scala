@@ -1,0 +1,66 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source lint for the one session builder: `Sessions.graft` is the
+  * only code that creates an engine session, so every session gets
+  * `GraftExtensions` and the canonical conf. A main or spec that builds
+  * its own session would silently lose both (the native as-of join
+  * would then fail to plan), and a run-time registration through
+  * `spark.experimental` would make plans depend on call order. Fails
+  * on either pattern outside the allowed sites:
+  *
+  *  - the builder call: `Sessions.scala` in `src/main`; in `src/test`
+  *    only `SessionsSpec`'s pure `applyMaster` cases, which build no
+  *    session;
+  *  - `spark.experimental` in `src/main`: nowhere but `Sessions.scala`.
+  */
+class SessionGuardSpec extends AnyFunSuite {
+
+  // split so this file does not match its own patterns
+  private val builderCall = "SparkSession" + ".builder("
+  private val experimental = "spark" + ".experimental"
+
+  private val root = Paths.get(sys.props("user.dir"))
+  private val sessionsFile = "src/main/scala/graft/Sessions.scala"
+
+  /** (repo-relative path, 1-based line number, line) of every line under
+    * `dir` that contains `pattern`. */
+  private def hits(dir: String, pattern: String): Seq[(String, Int, String)] =
+    Using.resource(Files.walk(root.resolve(dir))) { paths =>
+      paths.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+    }.sorted.flatMap { p: Path =>
+      val rel = root.relativize(p).toString
+      Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (line, i) if line.contains(pattern) => (rel, i + 1, line.trim)
+      }
+    }
+
+  private def show(bad: Seq[(String, Int, String)]): String =
+    bad.map { case (f, n, l) => s"$f:$n: $l" }.mkString("\n")
+
+  test("only Sessions.scala creates a session in src/main") {
+    val (allowed, bad) = hits("src/main", builderCall).partition(_._1 == sessionsFile)
+    // the allowed site must stay real, or the scan looked in the wrong place
+    assert(allowed.nonEmpty, s"no $builderCall found in $sessionsFile under $root")
+    assert(bad.isEmpty, s"build sessions through Sessions.graft:\n${show(bad)}")
+  }
+
+  test("specs get their session from Sessions.graft") {
+    val bad = hits("src/test", builderCall).filterNot { case (f, _, line) =>
+      f.endsWith("/SessionsSpec.scala") && line.contains("Sessions.applyMaster(")
+    }
+    assert(bad.isEmpty, s"build test sessions through SparkSpec:\n${show(bad)}")
+  }
+
+  test("nothing in src/main registers rules through spark.experimental") {
+    val bad = hits("src/main", experimental).filterNot(_._1 == sessionsFile)
+    assert(bad.isEmpty,
+      s"install strategies and rules in GraftExtensions instead:\n${show(bad)}")
+  }
+}

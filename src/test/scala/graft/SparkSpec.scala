@@ -4,19 +4,14 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all suites — one JVM-wide SparkSession
-  * (getOrCreate), local[4], UTC, nanos-tolerant. */
+  * (getOrCreate) from the engine's own builder, local[4]. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val spark: SparkSession = Sessions.graft("4")
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     // FAIR so ConcurrentServingSpec can exercise multi-tenant pools
     // (scheduler mode is fixed at context creation); single-query
     // suites are unaffected — one pool, one job at a time
     .config("spark.scheduler.mode", "FAIR")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"

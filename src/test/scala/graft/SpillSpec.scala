@@ -1,9 +1,7 @@
 package graft
 
-import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Path, Paths}
 
-import scala.jdk.CollectionConverters._
 import scala.sys.process._
 
 /** Spill-path proof (VERDICT r9 "next round" #1): every operator family
@@ -51,16 +49,10 @@ class SpillSpec extends SparkSpec {
   // (retuned from the failure log's spill table, per its design).
   private val mustSpill = Set("q115", "q116", "q139", "q149")
 
-  private def addOpens: Seq[String] =
-    ManagementFactory.getRuntimeMXBean.getInputArguments.asScala.toSeq
-      .sliding(2).collect { case Seq("--add-opens", v) =>
-        Seq("--add-opens", v)
-      }.flatten.toSeq
-
   private def forkProbe(out: Path, poolMb: Int, queries: String): Unit = {
     val java = Paths.get(System.getProperty("java.home"), "bin", "java").toString
     val cp = System.getProperty("java.class.path")
-    val cmd = Seq(java) ++ addOpens ++ Seq(
+    val cmd = Seq(java) ++ Sessions.addOpens.split(" ") ++ Seq(
       "-Xmx3g", "-cp", cp, "graft.tools.SpillProbe",
       sf("sf0.1"), out.toString, poolMb.toString, queries)
     val log = new StringBuilder

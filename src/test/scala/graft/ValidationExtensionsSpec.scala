@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.TradeValidation
 
 class ValidationExtensionsSpec extends SparkSpec {
@@ -48,12 +46,6 @@ class ValidationExtensionsSpec extends SparkSpec {
   }
 
   test("float_vec_dot is callable from SQL once registered") {
-    // same builder GraftExtensions injects, bound to the live session's
-    // registry (withExtensions only applies to fresh contexts)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "float_vec_dot",
-      exprs => graft.functions.FloatVecDot(exprs.head, exprs(1)),
-      "scala_udf")
     val r = spark.sql(
       "SELECT float_vec_dot(CAST(array(1.0, 2.0) AS ARRAY<FLOAT>), " +
         "CAST(array(3.0, 4.0) AS ARRAY<FLOAT>)) AS d").collect().head.getDouble(0)
@@ -64,17 +56,6 @@ class ValidationExtensionsSpec extends SparkSpec {
   }
 
   test("bottom_k and count_min aggregates are callable from SQL once registered") {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bottom_k",
-      exprs => graft.functions.BottomK(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "count_min_graft",
-      exprs => graft.functions.CountMinAgg(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].intValue()),
-      "scala_udf")
     Seq("c", "a", "b", "a").toDF("v").createOrReplaceTempView("gx_vals")
     val bk = spark.sql("SELECT bottom_k(v, 2) AS b FROM gx_vals")
       .collect().head.getSeq[String](0)
@@ -82,17 +63,15 @@ class ValidationExtensionsSpec extends SparkSpec {
     val sk = spark.sql("SELECT count_min_graft(v, 2, 16) AS sk FROM gx_vals")
       .collect().head.getSeq[Long](0)
     assert(sk.length == 32 && sk.sum == 8) // 4 values x 2 sketch rows
+    // merging two partial sketches cell-wise equals sketching the union
+    val merged = spark.sql(
+      "SELECT count_min_merge_graft(sk, 2, 16) AS sk FROM (" +
+        "SELECT count_min_graft(v, 2, 16) AS sk FROM gx_vals GROUP BY v = 'a')")
+      .collect().head.getSeq[Long](0)
+    assert(merged == sk)
   }
 
   test("int8_vec_dot and zorder2 are callable from SQL once registered") {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "int8_vec_dot",
-      exprs => graft.functions.Int8VecDot(exprs.head, exprs(1)),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "zorder2",
-      exprs => graft.functions.ZOrder2(exprs.head, exprs(1)),
-      "scala_udf")
     val d = spark.sql(
       "SELECT int8_vec_dot(CAST(array(1, -2) AS ARRAY<TINYINT>), " +
         "CAST(array(3, 4) AS ARRAY<TINYINT>)) AS d").collect().head.getLong(0)
@@ -102,10 +81,6 @@ class ValidationExtensionsSpec extends SparkSpec {
   }
 
   test("pcm_fold is callable from SQL once registered") {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pcm_fold",
-      exprs => graft.functions.PcmFold(exprs.head),
-      "scala_udf")
     // canonical 44-byte-header WAV, fmt=1 (PCM), 16-bit, two samples:
     // +1 and -2 → n=2, sum=-1, peak=2
     val hdr = Array[Byte]('R', 'I', 'F', 'F', 0, 0, 0, 0,
