@@ -73,12 +73,20 @@ object Bench {
     }
     // a query that throws is reported with NEGATIVE elapsed time and
     // listed in "failed" — a regression that fails fast must not read as
-    // a bench speedup
+    // a bench speedup. Its cause goes to stderr at once and, first cause
+    // per query, to the trials sidecar's "failure_causes".
+    val failureCauses = scala.collection.mutable.LinkedHashMap.empty[String, String]
     def timed(name: String,
               fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : Double = {
       val t0 = System.nanoTime()
-      val ok = try { materialize(name, fn(spark, sfDir)); true } catch { case _: Throwable => false }
+      val ok = try { materialize(name, fn(spark, sfDir)); true } catch {
+        case t: Throwable =>
+          val cause = failureCause(t)
+          System.err.println(s"bench: $name failed: $cause")
+          failureCauses.getOrElseUpdate(name.takeWhile(_ != '_'), cause)
+          false
+      }
       val secs = (System.nanoTime() - t0) / 1e9
       isolate(name)
       if (ok) secs else -secs
@@ -289,10 +297,7 @@ object Bench {
     // injected confs are part of the run's identity: without this field
     // a conf-tweaked run is indistinguishable from a plain run at the
     // same sha, and the record would be irreproducible from its own line
-    val confField = injectedConf.fold("") { c =>
-      val esc = c.replace("\\", "\\\\").replace("\"", "\\\"")
-      s""""conf":"$esc","""
-    }
+    val confField = injectedConf.fold("")(c => s""""conf":${jsonString(c)},""")
     // the SOURCE DIGEST rides beside the sha: promotion keys code
     // identity on it, so a doc-only commit (new sha, same src/main)
     // can no longer reset the record under "code changed" (round 16:
@@ -369,9 +374,11 @@ object Bench {
         // full per-trial matrix: {"trials":N,"runs":[{q:t,…},…]} — the
         // evidence a reviewer needs to tell debris from regression
         val runsJson = runs.map(jmap).mkString("[", ",", "]")
+        val causesJson = failureCauses.map { case (k, v) =>
+          jsonString(k) + ":" + jsonString(v) }.mkString("{", ",", "}")
         java.nio.file.Files.write(
           benchDir.resolve("last_bench_trials.json"),
-          (s"""{"sf":"$sfDir","trials":$trials,"noise":$noise,"runs":$runsJson}""" + "\n")
+          (s"""{"sf":"$sfDir","trials":$trials,"noise":$noise,"runs":$runsJson,"failure_causes":$causesJson}""" + "\n")
             .getBytes("UTF-8"))
         System.err.println(s"bench: promoted to ${recordPath} [$rule]")
       } else {
@@ -384,6 +391,24 @@ object Bench {
     }
     spark.stop()
   }
+
+  /** One line naming why a query failed: `<class>: <first line of the
+    * message> at <first stack frame>`. */
+  private[graft] def failureCause(t: Throwable): String = {
+    val msg = Option(t.getMessage).map(_.linesIterator.nextOption().getOrElse(""))
+      .getOrElse("")
+    val frame = t.getStackTrace.headOption.map(_.toString).getOrElse("?")
+    s"${t.getClass.getName}: $msg at $frame"
+  }
+
+  /** `s` as a JSON string literal: quotes, backslashes and control
+    * characters escaped. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 
   /** HEAD commit of the working tree the bench ran from; "unknown" when
     * git is unavailable (the artifact still writes — the SHA is

@@ -11,18 +11,23 @@ import graft.sources.Tables
 
 /** Structured Streaming surface (SURVEY §2.9): the reference's
   * scheduler-triggered batch ETL maps to `Trigger.AvailableNow`
-  * micro-batches over a file source. Two queries:
+  * micro-batches over a file source. The family covers every streaming
+  * shape the engine serves:
   *
-  *  - q30: tumbling 1-day event-time windows with a watermark — the
-  *    incremental aggregation a periodic ETL would maintain.
-  *  - q31: the idempotent dedup-merge load (S5 / etl.py:46-65) run
-  *    *through the streaming engine*: two micro-batches (original +
-  *    replay-with-new-rows) merged by `foreachBatch` into a parquet
-  *    state dir with within-batch dedup + anti-join-against-existing,
-  *    exactly the reference's INSERT OR IGNORE.
+  *  - windowed aggregation: tumbling (q30, q119 reads its state back),
+  *    sliding (q73), chained (q94) and session windows (q68);
+  *  - arbitrary state: mapGroupsWithState (q37), flatMapGroupsWithState
+  *    sessionization (q45) and transformWithState (q120);
+  *  - stream-stream interval joins: inner (q52), left outer (q60), left
+  *    semi (q81) and full outer (q90);
+  *  - dedup within the watermark (q53), and the stateless shapes: the
+  *    idempotent dedup-merge load (q31), stream-static enrichment (q71)
+  *    and CDC apply (q102), all `foreachBatch` or pure pipelines.
   *
-  * Both run synchronously (AvailableNow + awaitTermination) so the
-  * driver can treat them as ordinary queries.
+  * Every query with a state store enters through [[stateful]], which
+  * picks the RocksDB provider and sizes the store count. All run
+  * synchronously (AvailableNow + awaitTermination) so callers can
+  * treat them as ordinary queries.
   */
 object StreamingQueries {
 
@@ -36,12 +41,22 @@ object StreamingQueries {
   private def eventsStreamSchema(spark: SparkSession, sfDir: String): StructType =
     Tables.eventsRawSchema(spark, sfDir)
 
-  /** Stateful queries default to the RocksDB state-store provider: the
-    * only provider whose state spills to native memory/disk and
-    * checkpoints incrementally, i.e. the one a 100 TB deployment runs —
-    * the JVM-heap HDFS provider caps state at executor heap.
-    * StreamingStateSpec proves provider equivalence on the same queries. */
-  private def useRocksDbState(spark: SparkSession): Unit = {
+  /** The one entry point for every query with a state store: run
+    * `body` on the RocksDB provider with the state-store count sized by
+    * [[statePartitionsAuto]] (or pinned by `graft.stream.statePartitions`).
+    *
+    * RocksDB is the only provider whose state spills to native
+    * memory/disk and checkpoints incrementally, i.e. the one a 100 TB
+    * deployment runs — the JVM-heap HDFS provider caps state at
+    * executor heap. StreamingStateSpec proves provider equivalence on
+    * the same queries. The provider confs stay set on the session.
+    *
+    * shuffle.partitions is the state-store partition count, FIXED at a
+    * query's first start (the checkpoint pins it), so it is set only
+    * around `body` and restored after: batch queries keep the
+    * session's own count. The readbacks the queries return run after
+    * the restore, at that count. */
+  private[graft] def stateful[T](spark: SparkSession, sfDir: String)(body: => T): T = {
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // Changelog checkpointing: each commit uploads the batch's DELTA
@@ -59,6 +74,15 @@ object StreamingQueries {
     spark.conf.set(
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
       "true")
+    // Join state format v3: a stream-stream join keeps its four state
+    // stores (keys and values of each side) as virtual column families
+    // of ONE RocksDB instance per partition instead of four instances,
+    // so a join partition loads, commits and maintains one store, not
+    // four. RocksDB-only, which every stateful query here is. The
+    // version is pinned per checkpoint (OffsetSeqMetadata): a
+    // checkpoint first written at v2 keeps v2 on restart
+    // (StreamingStateSpec), so this never breaks a running deployment.
+    spark.conf.set("spark.sql.streaming.join.stateFormatVersion", "3")
     // Row-count tracking makes every state PUT pay a GET first (the
     // store keeps numRowsTotal exact by diffing). The queries here never
     // read that metric — the spec'd observability contract is input
@@ -72,46 +96,52 @@ object StreamingQueries {
     spark.conf.set(
       "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
       spark.conf.getOption("graft.stream.trackStateRows").getOrElse("false"))
+    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions",
+      spark.conf.getOption("graft.stream.statePartitions").getOrElse(
+        statePartitionsAuto(spark.sparkContext.defaultParallelism,
+          eventsBytes(spark, sfDir)).toString))
+    try body finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
   }
 
-  /** Run `f` with shuffle.partitions (= the state-store partition
-    * count, FIXED at first query start from that conf) sized to the
-    * stateful work instead of the session's batch default. A real
-    * deployment sizes this per streaming job: the store count bounds
-    * the join/window's task parallelism for the query's whole life, and
-    * each partition is a RocksDB instance with fixed overhead — too few
-    * starves a big cluster, too many drowns a small job in store
-    * maintenance. `graft.stream.statePartitions` pins it; UNSET, the
-    * default is derived from the runtime AND the visible backlog
-    * instead of asserted at bench scale:
-    * min(64, max(8, min(defaultParallelism, backlogBytes/4MiB))).
-    * Both terms were bought with a measured incident each. The old
-    * fixed default (8) was a silent scale cap — a stateful query's
-    * first start pins its parallelism for life, and at sf10 it capped
-    * the interval join at 8 parallel tasks on a 32-core local-cluster
-    * (q52 ~28 min vs 500 s at 32 stores). The cores-ONLY rule that
-    * replaced it was the same mistake inverted: 32 RocksDB stores on a
-    * 2 MB bench backlog put ~9 s of store setup under a 0.15 s data
-    * cost and inflated the whole sf0.1 sweep 206 → 262 s (round 16).
-    * The floor (8) keeps tiny sessions out of store-maintenance
-    * overhead; the ceiling (64) bounds per-query RocksDB instances on
-    * very wide clusters — beyond it, more stores buy no parallelism
-    * the state size doesn't already justify, and a deployment with
-    * that much state (or whose steady-state volume exceeds its staged
-    * first backlog) pins the conf. The partition count never changes
-    * RESULTS (StatePartitionsSpec). */
+  /** The state-store count of a stateful query when
+    * `graft.stream.statePartitions` is unset, derived from the runtime
+    * AND the visible backlog instead of asserted at bench scale:
+    * min(parallelism, min(64, max(8, backlogBytes/4MiB))).
+    * A real deployment sizes this per streaming job: the store count
+    * bounds the join/window's task parallelism for the query's whole
+    * life, and each partition is a RocksDB instance with fixed
+    * overhead — too few starves a big cluster, too many drowns a small
+    * job in store maintenance. Each term was bought with a measured
+    * incident. The old fixed default (8) was a silent scale cap — a
+    * stateful query's first start pins its parallelism for life, and
+    * at sf10 it capped the interval join at 8 parallel tasks on a
+    * 32-core local-cluster (q52 ~28 min vs 500 s at 32 stores). The
+    * cores-ONLY rule that replaced it was the same mistake inverted: 32
+    * RocksDB stores on a 2 MB bench backlog put ~9 s of store setup
+    * under a 0.15 s data cost and inflated the whole sf0.1 sweep 206 →
+    * 262 s (round 16). The floor (8) keeps tiny backlogs on wide
+    * sessions out of store-maintenance overhead; the ceiling (64)
+    * bounds per-query RocksDB instances on very wide clusters — beyond
+    * it, more stores buy no parallelism the state size doesn't already
+    * justify, and a deployment with that much state (or whose
+    * steady-state volume exceeds its staged first backlog) pins the
+    * conf. The cores are the OUTER bound, over the floor too: stores
+    * beyond the task slots run as a second wave of state tasks and
+    * never buy parallelism. The partition count never changes RESULTS
+    * (StatePartitionsSpec). */
   private[graft] def statePartitionsAuto(parallelism: Int,
                                          backlogBytes: Long): Int = {
-    // one store per 4 MiB of visible backlog, capped by cores: a
-    // RocksDB instance has fixed startup + maintenance cost, so a
-    // cores-only rule over-provisions tiny jobs — measured round 16,
-    // 32 stores on a 2 MB bench backlog put ~9 s of pure store setup
-    // under a 0.15 s data cost (the sf0.1 sweep inflated 206 → 262 s)
-    // while the sf10 probe (163 MB backlog) genuinely used all 32.
-    // 4 MiB/store reaches full-core parallelism by ~128 MiB on 32
-    // cores and keeps each store fat enough to amortize its overhead.
+    // one store per 4 MiB of visible backlog: a RocksDB instance has
+    // fixed startup + maintenance cost, so a cores-only rule
+    // over-provisions tiny jobs — measured round 16, 32 stores on a
+    // 2 MB bench backlog put ~9 s of pure store setup under a 0.15 s
+    // data cost (the sf0.1 sweep inflated 206 → 262 s) while the sf10
+    // probe (163 MB backlog) genuinely used all 32. 4 MiB/store reaches
+    // full-core parallelism by ~128 MiB on 32 cores and keeps each
+    // store fat enough to amortize its overhead.
     val byData = math.min(backlogBytes >> 22, 64L).toInt // clamp pre-cast
-    math.min(64, math.max(8, math.min(parallelism, byData)))
+    math.min(parallelism, math.min(64, math.max(8, byData)))
   }
 
   /** Total bytes of the events backlog for `sfDir` (file or Spark
@@ -124,16 +154,6 @@ object StreamingQueries {
       val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
       fs.getContentSummary(p).getLength
     } catch { case _: Throwable => Long.MaxValue }
-
-  private def withStateParts[T](spark: SparkSession, sfDir: String)
-                               (f: => T): T = {
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      spark.conf.getOption("graft.stream.statePartitions").getOrElse(
-        statePartitionsAuto(spark.sparkContext.defaultParallelism,
-          eventsBytes(spark, sfDir)).toString))
-    try f finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-  }
 
   /** Stage the events table into `srcDir` for the file streaming
     * source. The driver's testdata ships `events.parquet` as a single
@@ -339,8 +359,7 @@ object StreamingQueries {
     * to the engine's own numInputRows / numRowsDroppedByWatermark —
     * the late-data telemetry a production stream alerts on. The run's
     * progress records are kept in [[lastQ30Progress]]. */
-  def q30StreamTumbling(spark: SparkSession, sfDir: String): DataFrame = {
-    useRocksDbState(spark)
+  def q30StreamTumbling(spark: SparkSession, sfDir: String): DataFrame = stateful(spark, sfDir) {
     // the file streaming source wants a directory; stage a symlink dir.
     // Sink and checkpoint live in SIBLING dirs, never under the streamed
     // source path — a continuous or restarted run of a source-nested
@@ -424,10 +443,9 @@ object StreamingQueries {
     * source is split into two files streamed one per batch, so state
     * genuinely persists between batches; the final state equals the
     * batch aggregation, which is the oracle. */
-  def q37StreamUserStats(spark: SparkSession, sfDir: String): DataFrame = {
+  def q37StreamUserStats(spark: SparkSession, sfDir: String): DataFrame = stateful(spark, sfDir) {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import spark.implicits._
-    useRocksDbState(spark)
     val tmp = TempDirs.create("graft_q37").toFile.getAbsolutePath
     val ev = Tables.events(spark, sfDir)
       .select(col("user_id"), round(col("value") * 1e6).cast("long").as("vmicro"),
@@ -504,8 +522,7 @@ object StreamingQueries {
     * update; the final per-(user, session) row is the one with the
     * largest count — identical to the batch result, which is the
     * oracle. */
-  def q45StreamSessionize(spark: SparkSession, sfDir: String): DataFrame = {
-    useRocksDbState(spark)
+  def q45StreamSessionize(spark: SparkSession, sfDir: String): DataFrame = stateful(spark, sfDir) {
     val tmp = TempDirs.create("graft_q45").toFile.getAbsolutePath
     val (src, schema) = stageEventHalves(spark, sfDir, tmp)
     runSessionize(spark, src, s"$tmp/out", s"$tmp/ckpt", schema)
@@ -627,9 +644,9 @@ object StreamingQueries {
     * emit — the operator's contract, which the oracle encodes as the
     * same cutoff. Same +1-microsecond gap as q56 to align the window's
     * closed-open boundary with the batch walk's strictly-greater test. */
-  def q68StreamSessionWindow(spark: SparkSession, sfDir: String): DataFrame = {
+  def q68StreamSessionWindow(spark: SparkSession, sfDir: String)
+      : DataFrame = stateful(spark, sfDir) {
     import org.apache.spark.sql.streaming.OutputMode
-    useRocksDbState(spark)
     val tmp = TempDirs.create("graft_q68").toFile.getAbsolutePath
     val (src, schema) = stageEventHalves(spark, sfDir, tmp)
     val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
@@ -662,9 +679,9 @@ object StreamingQueries {
     * Emission contract (mirrored by the oracle): Spark tracks event-time
     * stats in MILLISECONDS, so a window emits iff
     * `window.end <= ms-truncated(max ts) - 1 hour`. */
-  def q73StreamSlidingWindow(spark: SparkSession, sfDir: String): DataFrame = {
+  def q73StreamSlidingWindow(spark: SparkSession, sfDir: String)
+      : DataFrame = stateful(spark, sfDir) {
     import org.apache.spark.sql.streaming.OutputMode
-    useRocksDbState(spark)
     val tmp = TempDirs.create("graft_q73").toFile.getAbsolutePath
     val (src, schema) = stageEventHalves(spark, sfDir, tmp,
       Seq("event_type", "ts", "value"))
@@ -702,34 +719,31 @@ object StreamingQueries {
     * 5-min window inside an emitted hour has itself closed (w5_end <=
     * h_end <= watermark), so emitted hours are complete — which the
     * oracle reproduces batch-side. */
-  def q94ChainedWindows(spark: SparkSession, sfDir: String): DataFrame = {
+  def q94ChainedWindows(spark: SparkSession, sfDir: String): DataFrame = stateful(spark, sfDir) {
     import org.apache.spark.sql.streaming.OutputMode
-    useRocksDbState(spark)
-    withStateParts(spark, sfDir) {
-      val tmp = TempDirs.create("graft_q94").toFile.getAbsolutePath
-      val (src, schema) = stageEventHalves(spark, sfDir, tmp,
-        Seq("event_type", "ts"))
-      val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
-      val q = stagedReader(spark, schema, src)
-        .withWatermark("ts", "1 hour")
-        .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
-        .agg(count(lit(1)).as("n5"))
-        .groupBy(window(window_time(col("window")), "1 hour"), col("event_type"))
-        .agg(sum("n5").as("n_events"), max("n5").as("peak_5min"),
-          count(lit(1)).as("n_5min_windows"))
-        .select(col("window.start").as("h_start"), col("window.end").as("h_end"),
-          col("event_type"), col("n_events"), col("peak_5min"),
-          col("n_5min_windows"))
-        .writeStream.outputMode(OutputMode.Append)
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(out)
-          ()
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      spark.read.parquet(out).orderBy("h_start", "event_type")
-    }
+    val tmp = TempDirs.create("graft_q94").toFile.getAbsolutePath
+    val (src, schema) = stageEventHalves(spark, sfDir, tmp,
+      Seq("event_type", "ts"))
+    val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
+    val q = stagedReader(spark, schema, src)
+      .withWatermark("ts", "1 hour")
+      .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
+      .agg(count(lit(1)).as("n5"))
+      .groupBy(window(window_time(col("window")), "1 hour"), col("event_type"))
+      .agg(sum("n5").as("n_events"), max("n5").as("peak_5min"),
+        count(lit(1)).as("n_5min_windows"))
+      .select(col("window.start").as("h_start"), col("window.end").as("h_end"),
+        col("event_type"), col("n_events"), col("peak_5min"),
+        col("n_5min_windows"))
+      .writeStream.outputMode(OutputMode.Append)
+      .option("checkpointLocation", ckpt)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        batch.write.mode("append").parquet(out)
+        ()
+      }
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    spark.read.parquet(out).orderBy("h_start", "event_type")
   }
 
   /** q52: stream-stream interval join — sparse "trade" events joined to
@@ -738,13 +752,8 @@ object StreamingQueries {
     * constraint, so the state store can evict: the shape that runs
     * forever at 100 TB. Inner join; all matching pairs are emitted
     * (unlike the as-of join's latest-only pick). */
-  def q52StreamIntervalJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    withStateParts(spark, sfDir)(
-      q52Inner(spark, sfDir))
-  }
-
-  private def q52Inner(spark: SparkSession, sfDir: String): DataFrame = {
-    useRocksDbState(spark)
+  def q52StreamIntervalJoin(spark: SparkSession, sfDir: String)
+      : DataFrame = stateful(spark, sfDir) {
     // sink/checkpoint as siblings of the source dir, not inside it
     val tmp = TempDirs.create("graft_q52")
     val srcDir = Files.createDirectories(tmp.resolve("src"))
@@ -804,13 +813,8 @@ object StreamingQueries {
     * readback keeps nulls only for event_ids with no matched row (and
     * one null per event, not one per bucket) — plain post-filtering,
     * proportional to the (sparse) null stream. */
-  def q60StreamOuterIntervalJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    withStateParts(spark, sfDir)(
-      q60Inner(spark, sfDir))
-  }
-
-  private def q60Inner(spark: SparkSession, sfDir: String): DataFrame = {
-    useRocksDbState(spark)
+  def q60StreamOuterIntervalJoin(spark: SparkSession, sfDir: String)
+      : DataFrame = stateful(spark, sfDir) {
     val tmp = TempDirs.create("graft_q60")
     val srcDir = Files.createDirectories(tmp.resolve("src"))
     val srcSchema = stageEventsSource(spark, srcDir, sfDir)
@@ -871,13 +875,7 @@ object StreamingQueries {
     * the stream just wrote. No watermark-cutoff logic: matched rows
     * always emit (the unmatched, which semi silently drops, are exactly
     * what the EXISTS oracle drops too). */
-  def q81StreamSemiJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    withStateParts(spark, sfDir)(
-      q81Inner(spark, sfDir))
-  }
-
-  private def q81Inner(spark: SparkSession, sfDir: String): DataFrame = {
-    useRocksDbState(spark)
+  def q81StreamSemiJoin(spark: SparkSession, sfDir: String): DataFrame = stateful(spark, sfDir) {
     val tmp = TempDirs.create("graft_q81")
     val srcDir = Files.createDirectories(tmp.resolve("src"))
     val srcSchema = stageEventsSource(spark, srcDir, sfDir)
@@ -936,13 +934,8 @@ object StreamingQueries {
     * left probes it, so right-side matching is complete and each
     * unmatched right emits exactly once — no dedup or cutoff logic
     * needed on that side. */
-  def q90StreamFullOuterJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    withStateParts(spark, sfDir)(
-      q90Inner(spark, sfDir))
-  }
-
-  private def q90Inner(spark: SparkSession, sfDir: String): DataFrame = {
-    useRocksDbState(spark)
+  def q90StreamFullOuterJoin(spark: SparkSession, sfDir: String)
+      : DataFrame = stateful(spark, sfDir) {
     val tmp = TempDirs.create("graft_q90")
     val srcDir = Files.createDirectories(tmp.resolve("src"))
     val srcSchema = stageEventsSource(spark, srcDir, sfDir)
@@ -995,8 +988,7 @@ object StreamingQueries {
     * The deduped stream lands in parquet; the readback aggregates per
     * type and must equal the batch aggregate over the ORIGINAL events —
     * proof no duplicate survived. */
-  def q53StreamDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    useRocksDbState(spark)
+  def q53StreamDedup(spark: SparkSession, sfDir: String): DataFrame = stateful(spark, sfDir) {
     val tmp = TempDirs.create("graft_q53").toFile.getAbsolutePath
     val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
     val ev = Tables.events(spark, sfDir)
@@ -1148,10 +1140,10 @@ object StreamingQueries {
     * q37 documents. Requires the RocksDB state-store provider — TWS
     * state lives in column families, which the HDFS-backed store does
     * not support. */
-  def q120TransformWithState(spark: SparkSession, sfDir: String): DataFrame = {
+  def q120TransformWithState(spark: SparkSession, sfDir: String)
+      : DataFrame = stateful(spark, sfDir) {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import spark.implicits._
-    useRocksDbState(spark)
     val tmp = TempDirs.create("graft_q120").toFile.getAbsolutePath
     val ev = Tables.events(spark, sfDir)
       .select(col("user_id"), round(col("value") * 1e6).cast("long").as("vmicro"),
@@ -1200,8 +1192,7 @@ object StreamingQueries {
     * growth) without touching the job — and the oracle match proves
     * the store holds exactly the aggregate it should, byte-decoded
     * correctly. */
-  def q119StateStoreRead(spark: SparkSession, sfDir: String): DataFrame = {
-    useRocksDbState(spark)
+  def q119StateStoreRead(spark: SparkSession, sfDir: String): DataFrame = stateful(spark, sfDir) {
     val tmp = TempDirs.create("graft_q119")
     val srcDir = Files.createDirectories(tmp.resolve("src"))
     val srcSchema = stageEventsSource(spark, srcDir, sfDir)

@@ -47,7 +47,7 @@ object MultiBatchProbe {
     val spark = graft.Sessions.graft().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // this probe's evidence IS numRowsTotal — opt back into row-count
-    // tracking (off by default since r18; see useRocksDbState)
+    // tracking (off by default since r18; see StreamingQueries.stateful)
     spark.conf.set("graft.stream.trackStateRows", "true")
 
     // per-batch telemetry: (inputRows, stateRowsTotal) per progress

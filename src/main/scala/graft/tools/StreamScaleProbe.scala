@@ -32,7 +32,7 @@ object StreamScaleProbe {
     val spark = graft.Sessions.graft().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // this probe's evidence IS numRowsTotal — opt back into row-count
-    // tracking (off by default since r18; see useRocksDbState)
+    // tracking (off by default since r18; see StreamingQueries.stateful)
     spark.conf.set("graft.stream.trackStateRows", "true")
 
     // per-progress snapshots; queries run one at a time, so

@@ -157,4 +157,20 @@ class BenchPromoteSpec extends AnyFunSuite {
     assert(Bench.recordValue(line).contains(195.88))
     assert(Bench.recordSha("""{"value":1.0}""").isEmpty)
   }
+
+  test("a failed query's cause names class, message and first frame, and survives JSON") {
+    val t = new IllegalStateException("state store \"q52\" lost\n== detail ==\t\\tail")
+    val cause = Bench.failureCause(t)
+    assert(cause.startsWith("java.lang.IllegalStateException: state store \"q52\" lost at "),
+      cause)
+    assert(cause.endsWith(t.getStackTrace.head.toString))
+    assert(!cause.contains("\n"), "one line per failure")
+    assert(Bench.failureCause(new RuntimeException()).startsWith(
+      "java.lang.RuntimeException:  at "))
+    // the sidecar's escaping, read back by an independent JSON parser
+    val raw = "q\"1\\ \u0001\n\t end"
+    val parsed = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readValue(Bench.jsonString(raw), classOf[String])
+    assert(parsed == raw)
+  }
 }

@@ -4,13 +4,14 @@ import org.apache.spark.sql.functions._
 import graft.streaming.StreamingQueries
 
 /** The state-store partition count is a DEPLOYMENT knob
-  * (`graft.stream.statePartitions`, default 8): it bounds a stateful
+  * (`graft.stream.statePartitions`; unset, `statePartitionsAuto` sizes
+  * it in [min(8, cores), 64], never above cores): it bounds a stateful
   * query's task parallelism for its whole life, so scale runs must be
-  * able to raise it (at sf10 the 8-store default capped the interval
-  * join at 8 tasks on a 32-core cluster — q52 took ~28 min until the
-  * round-15 probe raised it). Two contracts pinned here: the knob
-  * never changes RESULTS, and it never leaks into the session's batch
-  * shuffle.partitions. */
+  * able to raise it (at sf10 the old fixed 8-store default capped the
+  * interval join at 8 tasks on a 32-core cluster — q52 took ~28 min
+  * until the round-15 probe raised it). Two contracts pinned here: the
+  * knob never changes RESULTS, and it never leaks into the session's
+  * batch shuffle.partitions. */
 class StatePartitionsSpec extends SparkSpec {
 
   test("q52: state-partition count changes parallelism, never results; conf restored") {
@@ -28,7 +29,7 @@ class StatePartitionsSpec extends SparkSpec {
     } finally spark.conf.unset("graft.stream.statePartitions")
   }
 
-  test("unset knob auto-sizes from cores AND backlog, bounded [8, 64]") {
+  test("unset knob auto-sizes from cores AND backlog, never above cores") {
     // the pure sizing rule (the session here is local[4]; the rule is
     // what a 32-core or 1000-executor deployment resolves through).
     // Both terms carry a measured incident: cores-only at 8 capped a
@@ -39,12 +40,20 @@ class StatePartitionsSpec extends SparkSpec {
       "a 32-core session with a real backlog gets its core count")
     assert(StreamingQueries.statePartitionsAuto(32, 2 * MiB) == 8,
       "a tiny backlog keeps the overhead floor even on many cores")
-    assert(StreamingQueries.statePartitionsAuto(4, 163 * MiB) == 8,
-      "tiny sessions keep the overhead floor")
+    assert(StreamingQueries.statePartitionsAuto(4, 163 * MiB) == 4,
+      "a small session gets one store per core: a second wave of state " +
+        "tasks never buys parallelism")
     assert(StreamingQueries.statePartitionsAuto(1000, Long.MaxValue) == 64,
       "very wide clusters are bounded above; bigger state pins the conf")
     assert(StreamingQueries.statePartitionsAuto(1000, 40 * MiB) == 10,
       "a small backlog on a wide cluster sizes to the data")
+    // the cores are the outer bound at every backlog, and there is
+    // always at least one store
+    for (p <- Seq(1, 2, 3, 4, 8, 32, 1000);
+         b <- Seq(0L, 2 * MiB, 163 * MiB, Long.MaxValue)) {
+      val n = StreamingQueries.statePartitionsAuto(p, b)
+      assert(n >= 1 && n <= p, s"statePartitionsAuto($p, $b) = $n")
+    }
     // and the auto default changes nothing about RESULTS: pinning 3
     // above already proved invariance across counts — here prove auto
     // vs pinned-auto read identically, i.e. the unset path goes
