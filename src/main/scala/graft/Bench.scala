@@ -159,12 +159,11 @@ object Bench {
     // q39/q48/q51/q59 joined in round 16: their shared dup-pair table
     // commits through DerivedStore inside trial 1's window (read-back
     // thereafter), the same first-trial-vs-steady split as the rest
-    // q125 joined in round 18: its IVF index builds once per corpus
-    // version (IvfIndexStore.buildOnce) inside trial 1's window and is
-    // read back thereafter — the same first-trial-vs-steady split as
-    // the derived-store family
-    // q44 joined in round 19: its bucketed table pair builds once per
-    // (JVM, sfDir) (SourceQueries.q44Tables) inside trial 1's window
+    // q125 joined in round 18 and q44 in round 19: their IVF index
+    // (per corpus version) and bucketed table pair (per sfDir) are
+    // sources.Scaffold inputs, built inside trial 1's window and read
+    // back thereafter — the same first-trial-vs-steady split as the
+    // derived-store family
     val storeCommitQs = Set("q97", "q124", "q143", "q147", "q151", "q157", "q158",
       "q39", "q48", "q51", "q59", "q125", "q44")
     // iterative-training queries (k-means codebooks/centroids) run dozens

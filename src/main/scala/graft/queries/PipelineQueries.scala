@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.sources.TempDirs
+import graft.sources.{Scaffold, TempDirs}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
@@ -161,25 +161,25 @@ object PipelineQueries {
       .orderBy("doc")
 
   /** One persisted old-corpus signature index per (JVM, sfDir) — the
-    * store that prior runs committed (same memo shape as
-    * SourceQueries.q151StoreDir). Built on first touch, read back on
-    * every later call, so repeat q124 invocations — a bench trial
-    * matrix, a daily pipeline — measure the STEADY STATE the
-    * incremental contract promises: the round-14 salted-fixture probe
-    * attributed 42.3 s of q124's 95.7 s sf10 median to re-signing the
-    * 3/4 old corpus inside the timed window, cost a production index
-    * amortizes across batches and never pays per run. */
-  private val q124SigStore = scala.collection.concurrent.TrieMap.empty[String, String]
+    * store that prior runs committed, held as a [[Scaffold]]. Built on
+    * first touch, read back on every later call, so repeat q124
+    * invocations — a bench trial matrix, a daily pipeline — measure the
+    * STEADY STATE the incremental contract promises: the round-14
+    * salted-fixture probe attributed 42.3 s of q124's 95.7 s sf10
+    * median to re-signing the 3/4 old corpus inside the timed window,
+    * cost a production index amortizes across batches and never pays
+    * per run. */
+  private val q124SigStores = Scaffold.dirs[String]
 
   private[graft] def q124OldSigs(spark: SparkSession, sfDir: String): String =
-    q124SigStore.getOrElseUpdate(sfDir, {
-      val dir = TempDirs.create("graft_q124").resolve("sigs_old").toString
+    q124SigStores.inDir(sfDir, "graft_q124") { d =>
+      val dir = d.resolve("sigs_old").toString
       Dedup.minhashBandTable(
           Tables.documents(spark, sfDir).filter(col("doc_id") % 4 =!= 0),
           "doc_id", "text", k = 16, bands = 4)
         .write.mode("overwrite").parquet(dir)
       dir
-    })
+    }
 
   /** q124: INCREMENTAL dedup against a persisted signature index — the
     * shape a growing corpus actually runs: the existing corpus

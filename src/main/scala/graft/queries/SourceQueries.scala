@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.{PriceSink, Tables, TableStore, TempDirs, UniverseCsv}
+import graft.sources.{PriceSink, Scaffold, Tables, TableStore, TempDirs, UniverseCsv}
 import graft.operators.{Bucketing, Skew}
 
 /** Driver-verified queries over the source/sink boundary and the scale
@@ -161,25 +161,24 @@ object SourceQueries {
     * entire point of `bucketBy`, see Bucketing's doc); rebuilding both
     * layouts plus their catalog DDL every call measured ~2 s of the
     * query's ~2.9 s at sf0.1 (optimization r19, single-query probe).
-    * The q89Layout/q97Layout/q98Layout scaffolding discipline applies:
-    * trial 1 pays the build (visible in the bench trial matrix and the
-    * storeCommitQs floor), steady state measures the JOIN + aggregate.
-    * Table names carry a per-sfDir tag so two fixtures in one JVM never
-    * clobber each other's catalog entries; a memo hit re-validates both
-    * data dirs AND catalog entries (the IvfIndexStore hit-check lesson,
-    * ADVICE r18) and rebuilds when either was cleaned. */
-  private val q44LayoutCache =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String, String)]
+    * A [[Scaffold]]: trial 1 pays the build (visible in the bench trial
+    * matrix and the storeCommitQs floor), steady state measures the
+    * JOIN + aggregate. Table names carry a per-sfDir tag so two
+    * fixtures in one JVM never clobber each other's catalog entries; a
+    * hit is served only while both data dirs AND both catalog entries
+    * exist. */
+  private val q44Layouts = Scaffold[String, (String, String, String)] {
+    case (dir, _, _) =>
+      Seq("lineitem", "orders").forall(t => Scaffold.exists(s"$dir/$t"))
+  }
 
   private def q44Tables(spark: SparkSession, sfDir: String): (String, String) = {
-    def valid(e: (String, String, String)): Boolean = e match {
-      case (dir, liT, oT) =>
-        new java.io.File(s"$dir/lineitem").isDirectory &&
-          new java.io.File(s"$dir/orders").isDirectory &&
-          spark.catalog.tableExists(liT) && spark.catalog.tableExists(oT)
+    val inCatalog: ((String, String, String)) => Boolean = {
+      case (_, liT, oT) =>
+        spark.catalog.tableExists(liT) && spark.catalog.tableExists(oT)
     }
-    val entry = q44LayoutCache.get(sfDir).filter(valid).getOrElse {
-      val tmp = TempDirs.create("graft_q44").toFile.getAbsolutePath
+    val (_, liT, oT) = q44Layouts.inDir(sfDir, "graft_q44", inCatalog) { dir =>
+      val tmp = dir.toString
       val tag = java.security.MessageDigest.getInstance("MD5")
         .digest(sfDir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
       val liT = s"graft_q44_lineitem_$tag"
@@ -195,11 +194,9 @@ object SourceQueries {
         Tables.orders(spark, sfDir).select("o_orderkey", "o_orderpriority"),
         oT, buckets = 8, keys = Seq("o_orderkey"),
         path = Some(s"$tmp/orders"))
-      val e = (tmp, liT, oT)
-      q44LayoutCache.put(sfDir, e)
-      e
+      (tmp, liT, oT)
     }
-    (entry._2, entry._3)
+    (liT, oT)
   }
 
   /** Order-priority revenue rollup through bucketed tables: both sides
@@ -396,13 +393,12 @@ object SourceQueries {
     * one-off ETL, not the pruned scan q89 showcases, so repeated
     * invocations (bench warm-up + measured runs, spec + query in one
     * session) reuse the first write instead of re-partitioning the fact
-    * table every time. */
-  private val q89LayoutCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+    * table every time. A [[Scaffold]]. */
+  private val q89Layouts = Scaffold.dirs[String]
 
   private def q89Layout(spark: SparkSession, sfDir: String): String =
-    q89LayoutCache.getOrElseUpdate(sfDir, {
-      val tmp = TempDirs.create("graft_q89").toFile.getAbsolutePath
+    q89Layouts.inDir(sfDir, "graft_q89") { dir =>
+      val tmp = dir.toString
       val li = Tables.lineitem(spark, sfDir)
         .select(col("l_orderkey"), col("l_returnflag"),
           round(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 1e6)
@@ -419,7 +415,7 @@ object SourceQueries {
           expr("(cast(substring(ship_month, 6, 2) as int) - 1) div 3 + 1"))
         .coalesce(1).write.mode("overwrite").parquet(s"$tmp/calendar")
       tmp
-    })
+    }
 
   /** q89 joined frame before the final sort — factored out so DppSpec
     * can assert the plan shape on the exact frame the query runs. */
@@ -460,19 +456,17 @@ object SourceQueries {
     * q86 does — the file-count invariant survives because the writer
     * split is per partition-directory, not per task. */
   /** One degenerate small-file layout per (JVM, sfDir) — the INPUT
-    * q97 compacts, not the thing being timed (the q89Layout/q98Layout
-    * scaffolding discipline, applied here in optimization r19: the
-    * Q97Probe decomposition measured the layout build at ~1.0 s of the
-    * query's ~3.6 s steady state, bench/probe_r19_q97.json — a third
-    * of the bill for regenerating the same 160 tiny files every
-    * trial). At 100 TB the small-file mess EXISTS; compaction's cost
+    * q97 compacts, not the thing being timed, so a [[Scaffold]]
+    * (optimization r19: the Q97Probe decomposition measured the layout
+    * build at ~1.0 s of the query's ~3.6 s steady state,
+    * bench/probe_r19_q97.json — a third of the bill for regenerating
+    * the same 160 tiny files every trial). At 100 TB the small-file mess EXISTS; compaction's cost
     * is read + rewrite, which stays fully inside the timed window. */
-  private val q97LayoutCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val q97Layouts = Scaffold.dirs[String]
 
   private def q97Layout(spark: SparkSession, sfDir: String): String =
-    q97LayoutCache.getOrElseUpdate(sfDir, {
-      val tmp = TempDirs.create("graft_q97").toFile.getAbsolutePath
+    q97Layouts.inDir(sfDir, "graft_q97") { dir =>
+      val tmp = dir.toString
       // degenerate source layout: 32 hash-spread writers → up to 32
       // tiny files in every partition directory
       Tables.events(spark, sfDir)
@@ -480,7 +474,7 @@ object SourceQueries {
           round(col("value") * 1e6).cast("long").as("value_micro"))
         .repartition(32).write.partitionBy("event_type").parquet(s"$tmp/small")
       tmp
-    })
+    }
 
   def q97Compaction(spark: SparkSession, sfDir: String): DataFrame = {
     val small = s"${q97Layout(spark, sfDir)}/small"
@@ -501,14 +495,13 @@ object SourceQueries {
       .orderBy("event_type")
   }
 
-  /** One manifest-backed sorted layout per (JVM, sfDir) — scaffolding
-    * for q98's pruned scan, not the thing being timed. */
-  private val q98LayoutCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  /** One manifest-backed sorted layout per (JVM, sfDir) — a
+    * [[Scaffold]] for q98's pruned scan, not the thing being timed. */
+  private val q98Layouts = Scaffold.dirs[String]
 
   private def q98Layout(spark: SparkSession, sfDir: String): String =
-    q98LayoutCache.getOrElseUpdate(sfDir, {
-      val tmp = TempDirs.create("graft_q98").toFile.getAbsolutePath
+    q98Layouts.inDir(sfDir, "graft_q98") { dir =>
+      val tmp = dir.toString
       Tables.lineitem(spark, sfDir)
         .select(col("l_orderkey"), col("l_returnflag"),
           round(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 1e6)
@@ -532,7 +525,7 @@ object SourceQueries {
         .write.mode("overwrite").partitionBy("lo_month")
         .parquet(s"$tmp/manifest")
       tmp
-    })
+    }
 
   /** Scan planning against the q98 manifest: list the files whose
     * [lo, hi] range intersects [dateLo, dateHi]. Two prune layers:
@@ -607,14 +600,15 @@ object SourceQueries {
   // ---- q143: bloom-filter file skipping -----------------------------
 
   /** Per-file bloom index over `l_orderkey`, built once per (JVM,
-    * sfDir) off the q98 fact layout. One aggregation pass produces, per
-    * file: the bloom words, and the min/max key the spec uses to prove
-    * that range stats CANNOT prune these lookups. This is the
-    * Iceberg/Delta secondary bloom index shape: maintained at commit
-    * time in a real store, kilobytes per file, read only by the
-    * planner. */
-  private val q143IndexCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+    * sfDir) off the q98 fact layout, INTO the q98 layout's dir (a
+    * [[Scaffold]] served while that dir still holds the index). One
+    * aggregation pass produces, per file: the bloom words, and the
+    * min/max key the spec uses to prove that range stats CANNOT prune
+    * these lookups. This is the Iceberg/Delta secondary bloom index
+    * shape: maintained at commit time in a real store, kilobytes per
+    * file, read only by the planner. */
+  private val q143Indexes =
+    Scaffold[String, String](tmp => Scaffold.exists(s"$tmp/bloom_index"))
 
   /** ~14 bits/key → fp ≈ 2e-3, sized at BUILD time from the layout's
     * rows-per-file — the commit-time ndv sizing real stores do (parquet
@@ -633,39 +627,40 @@ object SourceQueries {
     bits
   }
 
-  private val q143ParamsCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Int, Int)]
+  private val q143ParamsByPath = Scaffold.values[String, (Int, Int)]
 
   /** (numBits, k) a store's index was built with — driver metadata off
-    * one index row; every probe of that index must use these. Cached
-    * per path: params are fixed at build time and every later commit
-    * rewrites with the SAME params (q151Commit/q158), so one metadata
-    * read serves the store's lifetime. */
+    * one index row; every probe of that index must use these. Memoized
+    * per path while the path exists: params are fixed at build time and
+    * every later commit rewrites with the SAME params (q151Commit/q158),
+    * so one metadata read serves the store's lifetime. */
   private def q143Params(spark: SparkSession, indexPath: String): (Int, Int) =
-    q143ParamsCache.getOrElseUpdate(indexPath, {
+    q143ParamsByPath.once(indexPath, _ => Scaffold.exists(indexPath)) {
       val r = spark.read.parquet(indexPath)
         .select("bloom_bits", "bloom_k").head()
       (r.getInt(0), r.getInt(1))
-    })
+    }
 
   private def q143Index(spark: SparkSession, sfDir: String): String =
-    q143IndexCache.getOrElseUpdate(sfDir, {
+    q143Indexes.once(sfDir) {
       val tmp = q98Layout(spark, sfDir)
       val fact = spark.read.parquet(s"$tmp/fact")
       val nFiles = math.max(1L,
         fact.select("_metadata.file_path").distinct().count())
       val bits = q143AdaptiveBits(fact.count() / nFiles)
-      fact
-        .groupBy(col("_metadata.file_path").as("path"))
-        .agg(
-          graft.functions.Bloom.sketch(col("l_orderkey"), bits, Q143K)
-            .as("bloom"),
-          min("l_orderkey").as("key_lo"), max("l_orderkey").as("key_hi"))
-        .withColumn("bloom_bits", lit(bits))
-        .withColumn("bloom_k", lit(Q143K))
+      bloomIndex(fact, bits, Q143K)
         .write.mode("overwrite").parquet(s"$tmp/bloom_index")
       tmp
-    })
+    }
+
+  /** The bloom index rows of `files`: per file, its bloom words over
+    * `l_orderkey`, its key range, and the (bits, k) it was built with. */
+  private def bloomIndex(files: DataFrame, bits: Int, k: Int): DataFrame =
+    files.groupBy(col("_metadata.file_path").as("path"))
+      .agg(graft.functions.Bloom.sketch(col("l_orderkey"), bits, k).as("bloom"),
+        min("l_orderkey").as("key_lo"), max("l_orderkey").as("key_hi"))
+      .withColumn("bloom_bits", lit(bits))
+      .withColumn("bloom_k", lit(k))
 
   /** The lookup keys: the 3 smallest distinct orderkeys in a fixed
     * residue class — a deterministic, oracle-reproducible stand-in for
@@ -744,21 +739,28 @@ object SourceQueries {
       .distinct().orderBy("k").limit(3)
       .collect().map(_.getLong(0))
 
+  /** A [[Scaffold]] of stores committed over the q143 layout, as
+    * (layout dir, store): served while both dirs exist, because the
+    * store's manifests name the layout's fact files. */
+  private def storesOverLayout[V](storeDir: V => String) =
+    Scaffold[String, (String, V)] { case (layout, v) =>
+      Scaffold.exists(layout) && Scaffold.exists(storeDir(v))
+    }
+
   /** One committed [[graft.sources.TableStore]] per (JVM, sfDir):
     * version 0's manifest is the bloom index over the q143 fact layout
     * — path + bloom + key range per file, i.e. the planning stats a
     * real store maintains at commit time. Exposed for the spec that
     * pins the commit-protocol consistency contract. */
-  private val q151StoreCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val q151Stores = storesOverLayout[String](identity)
 
   def q151StoreDir(spark: SparkSession, sfDir: String): String =
-    q151StoreCache.getOrElseUpdate(sfDir, {
+    q151Stores.inDir(sfDir, "graft_q151store") { dir =>
       val tmp = q143Index(spark, sfDir)
-      val dir = TempDirs.create("graft_q151store").toFile.getAbsolutePath
-      TableStore.commit(spark, dir, spark.read.parquet(s"$tmp/bloom_index"))
-      dir
-    })
+      TableStore.commit(spark, dir.toString,
+        spark.read.parquet(s"$tmp/bloom_index"))
+      (tmp, dir.toString)
+    }._2
 
   /** q151: targeted delete (the right-to-be-forgotten shape) — remove
     * three orderkeys from the immutable-file store by rewriting ONLY
@@ -793,38 +795,44 @@ object SourceQueries {
   def q151Commit(spark: SparkSession, sfDir: String)
       : (TableStore.Snapshot, TableStore.Snapshot, Int, Int, Array[Long]) = {
     val store = q151StoreDir(spark, sfDir)
+    val keys = q151Keys(spark, sfDir)
+    val (base, committed, picked, total) = deleteFromBase(spark, store, keys)
+    (base, committed, picked, total, keys)
+  }
+
+  /** Delete `keys` from the bloom-indexed `store` as one commit planned
+    * against its base (version-0) manifest: only the files the blooms
+    * pick are rewritten, into `files/rw<next>`, and the next manifest
+    * is the untouched entries ∪ the rewritten files' fresh index rows.
+    * Returns (base, committed — the base when nothing was picked —,
+    * rewritten files, total files). */
+  private def deleteFromBase(spark: SparkSession, store: String,
+      keys: Array[Long]): (TableStore.Snapshot, TableStore.Snapshot, Int, Int) = {
     val base = TableStore.Snapshot(store, 0L)
     val man = TableStore.manifest(spark, base)
     val (bits, k) = q143Params(spark, base.manifestPath)
-    val keys = q151Keys(spark, sfDir)
     val hit = keys.map(key =>
         graft.functions.Bloom.mightContain(col("bloom"), lit(key), bits, k))
       .reduce(_ || _)
     val picked = man.filter(hit)
       .select("path").collect().map(_.getString(0)) // bounded: 1/file
     val total = man.count().toInt
-    if (picked.isEmpty) (base, base, 0, total, keys)
+    if (picked.isEmpty) (base, base, 0, total)
     else {
       // commit ordering: data files, manifest, pointer — in that order
       val next = TableStore.currentVersion(store).fold(0L)(_ + 1)
       val out = s"$store/files/rw$next"
-      val keep = !col("l_orderkey").isin(keys.map(Long.box): _*)
       val pickedDf = spark.read.parquet(picked.toIndexedSeq: _*)
-      pickedDf.filter(keep).write.mode("overwrite").parquet(out)
+      pickedDf.filter(!col("l_orderkey").isin(keys.map(Long.box): _*))
+        .write.mode("overwrite").parquet(out)
       // explicit schema: a rewrite whose picked files held ONLY deleted
       // rows writes zero part files, which schema inference can't read
-      val rewrittenMan = spark.read.schema(pickedDf.schema).parquet(out)
-        .groupBy(col("_metadata.file_path").as("path"))
-        .agg(
-          graft.functions.Bloom.sketch(col("l_orderkey"), bits, k)
-            .as("bloom"),
-          min("l_orderkey").as("key_lo"), max("l_orderkey").as("key_hi"))
-        .withColumn("bloom_bits", lit(bits))
-        .withColumn("bloom_k", lit(k))
+      val rewritten =
+        bloomIndex(spark.read.schema(pickedDf.schema).parquet(out), bits, k)
       val committed = TableStore.commit(spark, store,
         man.filter(!col("path").isin(picked.toIndexedSeq: _*))
-          .unionByName(rewrittenMan))
-      (base, committed, picked.length, total, keys)
+          .unionByName(rewritten))
+      (base, committed, picked.length, total)
     }
   }
 
@@ -849,51 +857,23 @@ object SourceQueries {
     * newest version only. The intermediate version's rewritten files
     * become unreferenced and are physically reclaimed; the base FACT
     * files live outside the store's own tree and are never touched. */
-  private val q158StoreCache =
-    scala.collection.concurrent.TrieMap.empty[String, (String, Int, Int, Int)]
+  private val q158Stores = storesOverLayout[(String, Int, Int, Int)](_._1)
 
   def q158VacuumedStore(spark: SparkSession, sfDir: String)
       : (String, Int, Int, Int) =
-    q158StoreCache.getOrElseUpdate(sfDir, {
+    q158Stores.inDir(sfDir, "graft_q158store") { d =>
       val tmp = q143Index(spark, sfDir)
-      val dir = TempDirs.create("graft_q158store").toFile.getAbsolutePath
+      val dir = d.toString
       TableStore.commit(spark, dir, spark.read.parquet(s"$tmp/bloom_index"))
       val keys = q151Keys(spark, sfDir)
-      val keep = !col("l_orderkey").isin(keys.map(Long.box): _*)
-      def deleteCommit(): Int = {
-        val base = TableStore.Snapshot(dir, 0L)
-        val man = TableStore.manifest(spark, base)
-        val (bits, k) = q143Params(spark, base.manifestPath)
-        val hit = keys.map(key =>
-            graft.functions.Bloom.mightContain(col("bloom"), lit(key),
-              bits, k))
-          .reduce(_ || _)
-        val picked = man.filter(hit)
-          .select("path").collect().map(_.getString(0))
-        val next = TableStore.currentVersion(dir).fold(0L)(_ + 1)
-        val out = s"$dir/files/rw$next"
-        val pickedDf = spark.read.parquet(picked.toIndexedSeq: _*)
-        pickedDf.filter(keep).write.mode("overwrite").parquet(out)
-        val rewrittenMan = spark.read.schema(pickedDf.schema).parquet(out)
-          .groupBy(col("_metadata.file_path").as("path"))
-          .agg(graft.functions.Bloom.sketch(col("l_orderkey"),
-              bits, k).as("bloom"),
-            min("l_orderkey").as("key_lo"), max("l_orderkey").as("key_hi"))
-          .withColumn("bloom_bits", lit(bits))
-          .withColumn("bloom_k", lit(k))
-        TableStore.commit(spark, dir,
-          man.filter(!col("path").isin(picked.toIndexedSeq: _*))
-            .unionByName(rewrittenMan))
-        picked.length
-      }
-      val rw1 = deleteCommit() // v1: references files/rw1
-      deleteCommit()           // v2: same plan from base → files/rw2
+      val (_, _, rw1, _) = deleteFromBase(spark, dir, keys) // v1: files/rw1
+      deleteFromBase(spark, dir, keys) // v2: same plan from base → files/rw2
       // v0 and v1 fall past the horizon; rw1's files lose their last
       // reference and are reclaimed — rw2's and the base facts survive
       val (droppedManifests, deletedFiles) =
         TableStore.vacuum(spark, dir, retain = 1)
-      (dir, rw1, droppedManifests, deletedFiles)
-    })
+      (tmp, (dir, rw1, droppedManifests, deletedFiles))
+    }._2
 
   /** q158: retention GC (VACUUM) for the committed store — the
     * operation that makes an immutable-file table affordable to run
@@ -923,13 +903,13 @@ object SourceQueries {
     * `priority_rank`); version 1 appends a generation WITH the column
     * and DECLARES its backfill default in the commit metadata — the
     * default versions with the file list, exactly like a Delta
-    * column-default table property. Old files are never rewritten. */
-  private val q157StoreCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+    * column-default table property. Old files are never rewritten.
+    * A [[Scaffold]]. */
+  private val q157Stores = Scaffold.dirs[String]
 
   def q157StoreDir(spark: SparkSession, sfDir: String): String =
-    q157StoreCache.getOrElseUpdate(sfDir, {
-      val dir = TempDirs.create("graft_q157").toFile.getAbsolutePath
+    q157Stores.inDir(sfDir, "graft_q157") { d =>
+      val dir = d.toString
       val orders = Tables.orders(spark, sfDir)
         .select(col("o_orderkey"), col("o_orderstatus"),
           round(col("o_totalprice") * 1e6).cast("long").as("total_micro"),
@@ -950,7 +930,7 @@ object SourceQueries {
       TableStore.commit(spark, dir, man1.unionByName(man2),
         meta = Map("default.priority_rank" -> "-1"))
       dir
-    })
+    }
 
   /** q157: schema evolution on read, THROUGH the commit protocol. A
     * store that lives for years gains columns; the contract a 100 TB

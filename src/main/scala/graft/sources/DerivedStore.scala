@@ -1,6 +1,6 @@
 package graft.sources
 
-import scala.collection.concurrent.TrieMap
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Fingerprint-keyed DERIVED tables on [[TableStore]] — the build-once
@@ -32,15 +32,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object DerivedStore {
 
-  // committed data-file paths, memoized per (storeDir | fingerprint) so
-  // repeat calls within a session skip even the pointer read
-  private val memo = TrieMap.empty[String, Seq[String]]
-
-  /** Specs simulate a fresh JVM by dropping the memo — the STORE, not
-    * the memo, must then satisfy the next call. */
-  private[graft] def clearMemo(): Unit = memo.clear()
+  // committed data-file paths per (storeDir | fingerprint), so repeat
+  // calls within a session skip even the pointer read; builds are not
+  // serialized here, the store's CAS commit does that (filesFor). Specs
+  // clear it to simulate a fresh JVM: the STORE must then satisfy the
+  // next call.
+  private[graft] val committedFiles =
+    new Scaffold[String, Seq[String]](present, serialBuilds = false)
   // run-scoped store roots for sessions that configure none
-  private val tempDirs = TrieMap.empty[String, String]
+  private val tempRoots = Scaffold.dirs[String]
+
+  private def present(files: Seq[String]): Boolean =
+    files.forall(f => Files.exists(Paths.get(f)))
 
   /** Identity of `df`'s physical inputs: sorted (path, length, mtime)
     * digested MD5 (content identity, not crypto). Stat failures hash a
@@ -74,22 +77,24 @@ object DerivedStore {
                   sfDir: String): String =
     spark.conf.getOption(confKey)
       .map(root => s"$root/${sfDir.replaceAll("[^A-Za-z0-9._-]", "_")}")
-      .getOrElse(tempDirs.getOrElseUpdate(s"$name|$sfDir",
-        TempDirs.create(s"graft_derived_$name").toString))
+      .getOrElse(
+        tempRoots.inDir(s"$name|$sfDir", s"graft_derived_$name")(_.toString))
 
   /** Read-or-build: the committed data files for (`storeDir`, `fp`).
     * `build(dataDir)` writes the derived parquet when no committed
-    * version carries `fp`; the commit is CAS-guarded, and a lost race
-    * re-reads the winner's version (same fingerprint = same content —
-    * the derivation is deterministic by contract). */
+    * version carries `fp` with all its files present; the commit is
+    * CAS-guarded, and a lost race re-reads the winner's version (same
+    * fingerprint = same content — the derivation is deterministic by
+    * contract). */
   def filesFor(spark: SparkSession, storeDir: String, fp: String)
               (build: String => Unit): Seq[String] =
-    memo.getOrElseUpdate(s"$storeDir|$fp", {
+    committedFiles.once(s"$storeDir|$fp") {
       def committed(): Option[Seq[String]] =
         TableStore.currentVersion(storeDir)
           .map(v => TableStore.Snapshot(storeDir, v))
           .filter(s => TableStore.meta(s).get("fingerprint").contains(fp))
           .map(s => TableStore.filePaths(spark, s))
+          .filter(present)
       var result: Seq[String] = null
       while (result == null) {
         committed() match {
@@ -143,13 +148,12 @@ object DerivedStore {
                 // can still orphan one staging dir; that one is
                 // [[DerivedStore.vacuum]]'s job, run with an age
                 // horizon longer than any build.
-                deleteDir(new java.io.File(dataDir))
-                ()
+                TempDirs.deleteRecursively(Paths.get(dataDir))
             }
         }
       }
       result
-    })
+    }
 
   /** Age horizon for the commit-time opportunistic [[vacuum]]:
     * deliberately conservative — 24 h is far longer than any single
@@ -215,12 +219,6 @@ object DerivedStore {
       .filter(_.isDirectory)
       .filter(d => !referencesAny(d))
       .filter(d => newestMtime(d) < cutoff)
-      .map { d => deleteDir(d); d.getAbsolutePath }
-  }
-
-  private def deleteDir(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteDir)
-    f.delete()
-    ()
+      .map { d => TempDirs.deleteRecursively(d.toPath); d.getAbsolutePath }
   }
 }

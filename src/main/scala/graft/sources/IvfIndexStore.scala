@@ -29,18 +29,16 @@ import graft.operators.Similarity
   */
 object IvfIndexStore {
 
-  // built-index dirs, memoized per (corpus fingerprint | build params)
-  // within one JVM — the DerivedStore discipline for a directory-shaped
-  // artifact: an IVF index is rebuilt when the CORPUS changes, never
+  // built-index dirs per (corpus fingerprint | build params), a
+  // [[Scaffold]]: an IVF index is rebuilt when the CORPUS changes, never
   // per query (this object's own doc), so a second build over identical
-  // input files is pure waste. The manifest-written-last marker makes
-  // the memoized dir self-validating: a half-built dir never carries a
-  // manifest, and buildOnce rebuilds into a fresh dir rather than
-  // trusting it.
-  private val builtDirs = scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Specs simulate a fresh JVM by dropping the memo. */
-  private[graft] def clearMemo(): Unit = builtDirs.clear()
+  // input files is pure waste. A hit is served only while it is
+  // complete: the manifest is written last, so a half-built dir never
+  // carries one, and a dir whose centroids/ or buckets/ were reaped
+  // would fail its first topK read (ADVICE r18).
+  private[graft] val built = Scaffold[String, String](dir =>
+    Seq("manifest.json", "centroids", "buckets").forall(p =>
+      java.nio.file.Files.exists(java.nio.file.Paths.get(dir, p))))
 
   /** [[build]] amortized per corpus version: returns the directory of a
     * completed index for (`corpus` input files, build params), building
@@ -74,20 +72,9 @@ object IvfIndexStore {
       .digest(calKey.getBytes("UTF-8")).map("%02x".format(_)).mkString
     val key = DerivedStore.fingerprint(spark, corpus) +
       s"|k=$k|iters=$iters|calK=$calK|tr=$targetRecall|cal=$calDigest"
-    def complete(dir: String): Boolean =
-      Seq("manifest.json", "centroids", "buckets").forall(p =>
-        java.nio.file.Files.exists(java.nio.file.Paths.get(dir, p)))
-    builtDirs.get(key) match {
-      // the hit check mirrors the manifest-written-last completeness
-      // argument END TO END: a memoized dir whose centroids/ or
-      // buckets/ were reaped externally must rebuild, not serve a
-      // store whose first topK read would fail (ADVICE r18)
-      case Some(dir) if complete(dir) => dir
-      case _ =>
-        val dir = TempDirs.create("graft_ivf_store").toString
-        build(spark, corpus, dir, k, iters, calQueries, calK, targetRecall)
-        builtDirs.put(key, dir)
-        dir
+    built.inDir(key, "graft_ivf_store") { dir =>
+      build(spark, corpus, dir.toString, k, iters, calQueries, calK, targetRecall)
+      dir.toString
     }
   }
 

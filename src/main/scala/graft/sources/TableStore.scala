@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -58,13 +58,10 @@ object TableStore {
         "committed first. Rebuild against the current version and retry; " +
         "no version was lost or orphaned.")
 
-  // in-JVM half of the commit lock: one monitor per store dir
-  private val jvmLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  private def withCommitLock[T](dir: String)(f: => T): T = {
-    val mon = jvmLocks.computeIfAbsent(dir, _ => new Object)
-    mon.synchronized {
+  // in-JVM half of the commit lock: one monitor per store dir, from
+  // the keyed lock Scaffold builds under
+  private def withCommitLock[T](dir: String)(f: => T): T =
+    Scaffold.withKeyLock((TableStore, dir)) {
       Files.createDirectories(Paths.get(dir))
       val ch = java.nio.channels.FileChannel.open(
         Paths.get(dir, "_commit_lock"),
@@ -75,7 +72,6 @@ object TableStore {
         try f finally lk.release()
       } finally ch.close()
     }
-  }
 
   /** A pinned version: all planning for one query flows through this,
     * so the query's view cannot change mid-read. */
@@ -194,7 +190,7 @@ object TableStore {
     val retainedPaths = (horizon to cur).flatMap(v =>
       filePaths(spark, Snapshot(dir, v))).map(norm).toSet
     dropped.foreach { m =>
-      deleteRecursively(m)
+      TempDirs.deleteRecursively(m)
       Files.deleteIfExists(Paths.get(m.toString + ".meta"))
       ()
     }
@@ -214,12 +210,5 @@ object TableStore {
         }
     }
     (dropped.size, deleted)
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    val f = p.toFile
-    if (f.isDirectory) f.listFiles().foreach(c => deleteRecursively(c.toPath))
-    f.delete()
-    ()
   }
 }

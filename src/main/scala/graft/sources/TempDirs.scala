@@ -29,7 +29,7 @@ object TempDirs {
     * data files (the sf1 probe's events table) from inside the scratch
     * cleaner. A symlink is unlinked, whatever it points at; only real
     * directories are descended. TempDirsSpec pins this. */
-  private[sources] def deleteRecursively(p: Path): Unit = {
+  private[graft] def deleteRecursively(p: Path): Unit = {
     if (Files.isDirectory(p, LinkOption.NOFOLLOW_LINKS)) {
       val listing = Files.list(p)
       try listing.iterator().asScala.foreach(deleteRecursively)

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
-import graft.sources.TempDirs
+import graft.sources.{Scaffold, TempDirs}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -208,14 +208,14 @@ object StreamingQueries {
     }
 
   /** Staged source directories memoized per (shape, fixture, params)
-    * within one JVM — INPUT scaffolding, the q124SigStore / q89Layout /
-    * q97Layout discipline (optimization r19). The staged backlog is a
-    * deterministic derived LAYOUT of the fixture (same rows, same
-    * slice membership every time): it is the input a deployed stream
-    * finds on its source bucket, not part of the computation under
-    * test — and restaging it per invocation was a full Spark write job
-    * inside every streaming query's timed window (StreamFloorProbe r18
-    * measured staging as the largest single floor component). Every
+    * within one JVM — INPUT scaffolding, so a [[Scaffold]]
+    * (optimization r19). The staged backlog is a deterministic derived
+    * LAYOUT of the fixture (same rows, same slice membership every
+    * time): it is the input a deployed stream finds on its source
+    * bucket, not part of the computation under test — and restaging it
+    * per invocation was a full Spark write job inside every streaming
+    * query's timed window (StreamFloorProbe r18 measured staging as the
+    * largest single floor component). Every
     * invocation still replays the ENTIRE stream from the staged files
     * with a fresh checkpoint, so nothing downstream of the source is
     * ever reused across calls; trial 1 pays the one staging write per
@@ -223,15 +223,14 @@ object StreamingQueries {
     * every parameter that changes the staged bytes (fixture dir,
     * column list, slice count), so a probe that re-stages with
     * different splits gets its own directory. */
-  private val stagedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val stagedDirs = Scaffold.dirs[String]
 
   private def stagedOnce(key: String)(build: String => Unit): String =
-    stagedDirs.getOrElseUpdate(key, {
-      val src = TempDirs.create("graft_stream_src").resolve("src").toString
+    stagedDirs.inDir(key, "graft_stream_src") { d =>
+      val src = d.resolve("src").toString
       build(src)
       src
-    })
+    }
 
   /** Stage `df` into `src` as ordered micro-batch files with ONE write
     * job: partition the frame by the batch ordinal (`ord`, 0..k-1),
@@ -297,11 +296,7 @@ object StreamingQueries {
     // the staging skeleton (commit markers, empty partition dirs) is
     // dead weight once the moves are done; repeated bench trials would
     // otherwise accumulate one per staged stream (ADVICE r18)
-    def rmTree(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(rmTree)
-      f.delete(): Unit
-    }
-    rmTree(new java.io.File(staging))
+    TempDirs.deleteRecursively(java.nio.file.Paths.get(staging))
   }
 
   /** Write `ev` into `src` as `k` parquet slices over equal event-time

@@ -26,7 +26,7 @@ class AdjacencyStoreSpec extends SparkSpec {
 
       // fresh JVM simulated: drop the in-process memo — the store, not
       // the memo, must satisfy the second call (no new version)
-      DerivedStore.clearMemo()
+      DerivedStore.committedFiles.clear()
       val second = AnalyticsQueries.q115AdjacencyFiles(spark, sf())
       assert(second == first)
       assert(TableStore.currentVersion(scoped).contains(0L),
@@ -39,14 +39,14 @@ class AdjacencyStoreSpec extends SparkSpec {
       TableStore.commit(spark, scoped, first.toDF("path"),
         Map("fingerprint" -> "stale"))
       assert(TableStore.currentVersion(scoped).contains(1L))
-      DerivedStore.clearMemo()
+      DerivedStore.committedFiles.clear()
       val third = AnalyticsQueries.q115AdjacencyFiles(spark, sf())
       assert(third.nonEmpty)
       assert(TableStore.currentVersion(scoped).contains(2L),
         "fingerprint mismatch must rebuild, not serve stale files")
 
       // two fixtures under one root coexist in disjoint scoped stores
-      DerivedStore.clearMemo()
+      DerivedStore.committedFiles.clear()
       val other = AnalyticsQueries.q115AdjacencyFiles(spark, sf("sf0.01"))
       assert(other.nonEmpty && other != first)
       assert(TableStore.currentVersion(scoped).contains(2L),
@@ -57,7 +57,7 @@ class AdjacencyStoreSpec extends SparkSpec {
       assert(AnalyticsQueries.q115PageRank(spark, sf("sf0.01")).count() > 0)
     } finally {
       spark.conf.unset("graft.q115.adjacencyDir")
-      DerivedStore.clearMemo()
+      DerivedStore.committedFiles.clear()
     }
   }
 
@@ -115,7 +115,7 @@ class AdjacencyStoreSpec extends SparkSpec {
     val winnerDone = new java.util.concurrent.CountDownLatch(1)
     @volatile var loserFiles: Seq[String] = null
     @volatile var loserErr: Throwable = null
-    DerivedStore.clearMemo()
+    DerivedStore.committedFiles.clear()
     val loser = new Thread(() =>
       try {
         loserFiles = DerivedStore.filesFor(spark, store, fp) { dataDir =>
@@ -152,7 +152,7 @@ class AdjacencyStoreSpec extends SparkSpec {
     assert(staged.size == 1 &&
       winnerFiles.head.contains(staged.head),
       s"lost attempt's staging dir leaked: $staged")
-    DerivedStore.clearMemo()
+    DerivedStore.committedFiles.clear()
   }
 
   test("derived-store vacuum reclaims aged crash-orphans, spares in-flight and committed") {
@@ -170,7 +170,7 @@ class AdjacencyStoreSpec extends SparkSpec {
       java.nio.file.Files.write(d.resolve(name), "x".getBytes("UTF-8"))
       d.resolve(name).toFile
     }
-    DerivedStore.clearMemo()
+    DerivedStore.committedFiles.clear()
     // one committed version (the normal path)
     val committed = DerivedStore.filesFor(spark, store, "vac-fp") { dataDir =>
       writePart(dataDir, "part-committed.parquet"); ()
@@ -198,7 +198,7 @@ class AdjacencyStoreSpec extends SparkSpec {
     assert(TableStore.filePaths(spark, pinned) == committed)
     // idempotent: nothing left to reclaim
     assert(DerivedStore.vacuum(spark, store, 24 * 3600 * 1000L).isEmpty)
-    DerivedStore.clearMemo()
+    DerivedStore.committedFiles.clear()
   }
 
   test("a successful commit opportunistically vacuums aged crash-orphans") {
@@ -215,7 +215,7 @@ class AdjacencyStoreSpec extends SparkSpec {
       java.nio.file.Files.write(d.resolve(name), "x".getBytes("UTF-8"))
       d.resolve(name).toFile
     }
-    DerivedStore.clearMemo()
+    DerivedStore.committedFiles.clear()
     // a crashed attempt from "yesterday's" pipeline run: staged tree,
     // never committed, mtime past the commit-vacuum horizon
     val orphan = writePart(s"$store/files/v0_deadbeef", "part-orphan.parquet")
@@ -235,7 +235,7 @@ class AdjacencyStoreSpec extends SparkSpec {
       "a fresh attempt dir may be a build still in flight — never swept by the commit")
     committed.foreach(p => assert(new java.io.File(p).exists(),
       s"the just-committed files must survive their own commit's vacuum: $p"))
-    DerivedStore.clearMemo()
+    DerivedStore.committedFiles.clear()
   }
 
   test("shared co-shipment pair store: q115/q116/q139 read ONE committed build") {
@@ -250,9 +250,9 @@ class AdjacencyStoreSpec extends SparkSpec {
       // ...every later consumer — across simulated fresh JVMs — reads
       // the SAME version: the self-join is paid once per fixture, not
       // once per graph query
-      DerivedStore.clearMemo()
+      DerivedStore.committedFiles.clear()
       assert(AnalyticsQueries.q116MarketBasket(spark, sf()).count() > 0)
-      DerivedStore.clearMemo()
+      DerivedStore.committedFiles.clear()
       assert(AnalyticsQueries.q139TriangleCount(spark, sf()).count() > 0)
       assert(TableStore.currentVersion(scoped).contains(0L),
         "consumers must read the committed build, not re-derive")
@@ -271,7 +271,7 @@ class AdjacencyStoreSpec extends SparkSpec {
       assert(stored.exceptAll(direct).isEmpty && direct.exceptAll(stored).isEmpty)
     } finally {
       spark.conf.unset("graft.coship.pairsDir")
-      DerivedStore.clearMemo()
+      DerivedStore.committedFiles.clear()
     }
   }
 
@@ -286,12 +286,12 @@ class AdjacencyStoreSpec extends SparkSpec {
       assert(TableStore.currentVersion(scoped).contains(0L))
       // ...and clustering (both algorithms) + curation — across
       // simulated fresh JVMs — read the SAME committed version
-      DerivedStore.clearMemo()
+      DerivedStore.committedFiles.clear()
       val q48 = PipelineQueries.q48DedupClusters(spark, sf()).count()
-      DerivedStore.clearMemo()
+      DerivedStore.committedFiles.clear()
       val q59 = PipelineQueries.q59DedupClustersStar(spark, sf()).count()
       assert(q48 == q59, "both clustering algorithms see the same pairs")
-      DerivedStore.clearMemo()
+      DerivedStore.committedFiles.clear()
       assert(PipelineQueries.q51CorpusCuration(spark, sf()).count() > 0)
       assert(TableStore.currentVersion(scoped).contains(0L),
         "consumers must read the committed pairs, not re-derive them")
@@ -303,7 +303,7 @@ class AdjacencyStoreSpec extends SparkSpec {
       assert(q39.map(_.toSeq).toSet == direct.map(_.toSeq).toSet)
     } finally {
       spark.conf.unset("graft.dedup.pairsDir")
-      DerivedStore.clearMemo()
+      DerivedStore.committedFiles.clear()
     }
   }
 }

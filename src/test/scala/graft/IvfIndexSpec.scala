@@ -214,7 +214,7 @@ class IvfIndexSpec extends SparkSpec {
 
   test("buildOnce amortizes per corpus version and self-validates on a missing manifest") {
     import graft.sources.IvfIndexStore
-    IvfIndexStore.clearMemo()
+    IvfIndexStore.built.clear()
     val emb = spark.read.parquet(PipelineQueries.ClusteredEmbFixture)
     val queries = emb.filter(col("vec_id") % 31 === 0)
     val d1 = IvfIndexStore.buildOnce(spark, emb, k = 8, iters = 2,
@@ -255,7 +255,7 @@ class IvfIndexSpec extends SparkSpec {
     assert(d6 != d4 && java.nio.file.Files.exists(
       java.nio.file.Paths.get(d6, "buckets")),
       "a bucket-less memo entry must be rebuilt, not served")
-    IvfIndexStore.clearMemo()
+    IvfIndexStore.built.clear()
   }
 
   test("quantized rank resolves a crafted 1-ulp similarity boundary by id") {

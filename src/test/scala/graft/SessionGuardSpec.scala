@@ -7,27 +7,35 @@ import scala.util.Using
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source lint for the one session builder: `Sessions.graft` is the
-  * only code that creates an engine session, so every session gets
-  * `GraftExtensions` and the canonical conf. A main or spec that builds
-  * its own session would silently lose both (the native as-of join
-  * would then fail to plan), and a run-time registration through
-  * `spark.experimental` would make plans depend on call order. Fails
-  * on either pattern outside the allowed sites:
+/** Source lint for the one session builder and the one scaffolding
+  * memo. `Sessions.graft` is the only code that creates an engine
+  * session, so every session gets `GraftExtensions` and the canonical
+  * conf. A main or spec that builds its own session would silently lose
+  * both (the native as-of join would then fail to plan), and a run-time
+  * registration through `spark.experimental` would make plans depend on
+  * call order. `sources.Scaffold` is the only per-JVM memo, so every
+  * memoized input has its hit checked and is built once. Fails on any
+  * of these patterns outside the allowed sites:
   *
   *  - the builder call: `Sessions.scala` in `src/main`; in `src/test`
   *    only `SessionsSpec`'s pure `applyMaster` cases, which build no
   *    session;
-  *  - `spark.experimental` in `src/main`: nowhere but `Sessions.scala`.
+  *  - `spark.experimental` in `src/main`: nowhere but `Sessions.scala`;
+  *  - a memo map (`TrieMap`, `getOrElseUpdate`, `ConcurrentHashMap`) in
+  *    `src/main`: `Scaffold.scala`, plus the two maps that are not
+  *    scaffolding, listed in the test.
   */
 class SessionGuardSpec extends AnyFunSuite {
 
   // split so this file does not match its own patterns
   private val builderCall = "SparkSession" + ".builder("
   private val experimental = "spark" + ".experimental"
+  private val memoMaps =
+    Seq("Trie" + "Map", "getOrElse" + "Update", "ConcurrentHash" + "Map")
 
   private val root = Paths.get(sys.props("user.dir"))
   private val sessionsFile = "src/main/scala/graft/Sessions.scala"
+  private val scaffoldFile = "src/main/scala/graft/sources/Scaffold.scala"
 
   /** (repo-relative path, 1-based line number, line) of every line under
     * `dir` that contains `pattern`. */
@@ -62,5 +70,27 @@ class SessionGuardSpec extends AnyFunSuite {
     val bad = hits("src/main", experimental).filterNot(_._1 == sessionsFile)
     assert(bad.isEmpty,
       s"install strategies and rules in GraftExtensions instead:\n${show(bad)}")
+  }
+
+  test("per-JVM memos in src/main go through sources.Scaffold") {
+    // (file, line fragment) of the maps that are not input scaffolding:
+    // Dedup's guard memo is a bounded verdict cache with its own
+    // eviction spec; Bench's failure causes are one run's results
+    val notScaffolding = Seq(
+      "src/main/scala/graft/operators/Dedup.scala" ->
+        "[(String, Double, Long), Option[String]]",
+      "src/main/scala/graft/Bench.scala" -> "failureCauses.getOrElse")
+    val found = memoMaps.flatMap(hits("src/main", _)).distinct
+    val (inScaffold, rest) = found.partition(_._1 == scaffoldFile)
+    val (allowed, bad) = rest.partition { case (f, _, line) =>
+      notScaffolding.exists { case (af, frag) => f == af && line.contains(frag) }
+    }
+    assert(bad.isEmpty, s"memoize through sources.Scaffold:\n${show(bad)}")
+    // every allowed site must stay real, or the scan looked in the wrong place
+    assert(inScaffold.nonEmpty, s"no memo map found in $scaffoldFile under $root")
+    notScaffolding.foreach { case (af, frag) =>
+      assert(allowed.exists { case (f, _, l) => f == af && l.contains(frag) },
+        s"allow-list entry $af / $frag matches nothing")
+    }
   }
 }
