@@ -5,7 +5,8 @@ import java.util.concurrent.ConcurrentHashMap
 
 /** The one per-JVM memo for input SCAFFOLDING: a deterministic input
   * a query reads but does not test (a staged stream backlog, a bucketed
-  * or partitioned layout, a bloom index, a signature store), built on
+  * or partitioned layout, a bloom index, a signature store, the schema
+  * [[Tables.raw]] infers for a fixture table), built on
   * the first call and read back by every later call in the JVM, so the
   * timed window measures the query, not the rebuild of its input. At
   * 100 TB that input already exists on the source bucket; here the

@@ -1,7 +1,11 @@
 package graft.sources
 
+import java.io.IOException
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Readers over the driver-generated star schema (TESTDATA.md) plus the
   * semantic views that re-express the reference's data model
@@ -18,6 +22,13 @@ import org.apache.spark.sql.functions._
   * TIMESTAMP sees for either layout, which keeps the oracle comparable.
   * A production lake faces exactly this (upstream writers change
   * timestamp encodings); pinning one physical type is a latent outage.
+  *
+  * Schemas: a plain `spark.read.parquet` infers its schema with a Spark
+  * job that reads the file footers, and the dashboard re-reads the same
+  * immutable tables on every request. [[raw]] infers each table's schema
+  * once per (path, listing, parquet confs) and reads with it, so
+  * building a query launches no job. Any rewritten file or changed conf
+  * is a new key and is inferred again.
   */
 object Tables {
 
@@ -54,8 +65,49 @@ object Tables {
     if (maxLeaf < BigInt(ceiling)) broadcast(df) else df
   }
 
-  def raw(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** A fixture table, read with its memoized schema (see `schemas`). */
+  def raw(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    schemaKey(spark, path) match {
+      case Some(key) =>
+        spark.read.schema(schemas.once(key)(spark.read.parquet(path).schema)).parquet(path)
+      // missing or empty: the plain read raises its usual error
+      case None => spark.read.parquet(path)
+    }
+  }
+
+  /** (table path, listing, parquet confs) -> the schema a plain
+    * `spark.read.parquet` infers (a job: `SchemaMergeUtils
+    * .mergeSchemasInParallel` reads the footers). The listing is (path,
+    * length, modification time) of every file under the table, and the
+    * confs are every set `spark.sql.parquet.*` and
+    * `spark.sql.legacy.parquet.*` key plus `spark.sql.caseSensitive`:
+    * the inputs that decide what inference returns. A rewritten or added
+    * file, or a changed conf, is a new key and infers again, so a stale
+    * schema is never served; there is nothing else to check on a hit. */
+  private type SchemaKey = (String, Seq[(String, Long, Long)], Seq[(String, String)])
+
+  private val schemas = Scaffold.values[SchemaKey, StructType]
+
+  private def schemaKey(spark: SparkSession, path: String): Option[SchemaKey] = {
+    val p = new Path(path)
+    val listing = try {
+      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+      val files = Seq.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      files.result().sorted
+    } catch { case _: IOException => Nil }
+    if (listing.isEmpty) None
+    else {
+      val confs = spark.conf.getAll.toSeq.filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+      }.sorted :+ ("spark.sql.caseSensitive" -> spark.conf.get("spark.sql.caseSensitive"))
+      Some((path, listing, confs))
+    }
+  }
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = raw(spark, sfDir, "lineitem")
   def orders(spark: SparkSession, sfDir: String): DataFrame   = raw(spark, sfDir, "orders")
@@ -71,7 +123,7 @@ object Tables {
     * int64 surfaced as LongType (never an analysis error). Streaming
     * readers need this explicitly — a file stream source requires a
     * user-supplied schema. */
-  def eventsRawSchema(spark: SparkSession, sfDir: String): org.apache.spark.sql.types.StructType = {
+  def eventsRawSchema(spark: SparkSession, sfDir: String): StructType = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw(spark, sfDir, "events").schema
   }

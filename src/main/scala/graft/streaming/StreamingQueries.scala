@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import graft.sources.{Scaffold, TempDirs}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.types._
 import graft.sources.Tables
 
@@ -333,6 +333,24 @@ object StreamingQueries {
       .parquet(src)
   }
 
+  /** Drain `frame` in one AvailableNow run that appends each
+    * micro-batch to parquet at `out` (an executor-side sink, not a
+    * driver-side memory table), then read the sink back. The sink holds
+    * exactly the frame's columns, so the readback takes the frame's
+    * schema and runs no inference job. */
+  private def sinkAndRead(frame: DataFrame, out: String, ckpt: String,
+      mode: OutputMode = OutputMode.Append): DataFrame = {
+    frame.writeStream.outputMode(mode)
+      .option("checkpointLocation", ckpt)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        batch.write.mode("append").parquet(out)
+        ()
+      }
+      .trigger(Trigger.AvailableNow()).start()
+      .awaitTermination()
+    frame.sparkSession.read.schema(frame.schema).parquet(out)
+  }
+
   /** Progress snapshots of the most recent [[q30StreamTumbling]] run —
     * the per-batch `StreamingQueryProgress` records (input rows, state
     * rows, watermark-dropped rows, observed metrics) a deployed
@@ -380,7 +398,7 @@ object StreamingQueries {
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
     lastQ30Progress = q.recentProgress.toSeq
-    spark.read.parquet(out)
+    spark.read.schema(stream.schema).parquet(out)
       .select(to_date(col("window.start")).as("window_day"),
         col("event_type").as("ticker"), col("n_events"),
         (col("tv").cast("double") / 1e6).as("total_value"))
@@ -439,7 +457,7 @@ object StreamingQueries {
     * genuinely persists between batches; the final state equals the
     * batch aggregation, which is the oracle. */
   def q37StreamUserStats(spark: SparkSession, sfDir: String): DataFrame = stateful(spark, sfDir) {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
     import spark.implicits._
     val tmp = TempDirs.create("graft_q37").toFile.getAbsolutePath
     val ev = Tables.events(spark, sfDir)
@@ -455,7 +473,7 @@ object StreamingQueries {
     }
 
     val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
-    val q = spark.readStream.schema(StructType(ev.schema.filter(_.name != "event_id")))
+    val frame = spark.readStream.schema(StructType(ev.schema.filter(_.name != "event_id")))
       .option("maxFilesPerTrigger", "1").parquet(src2)
       .as[(Long, Long)]
       .groupByKey(_._1)
@@ -468,21 +486,12 @@ object StreamingQueries {
           (uid, n, s)
       }
       .toDF("user_id", "n_events", "sum_micro")
-      .writeStream.outputMode(OutputMode.Update)
-      .option("checkpointLocation", ckpt)
-      // update stream appends each batch's state changes to parquet —
-      // an executor-side sink, not a driver-side memory table
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(out)
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    val sunk = sinkAndRead(frame, out, ckpt, OutputMode.Update)
     // the update stream emits one row per state change; the final state
     // per user is the one with the largest cumulative count
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("user_id").orderBy(col("n_events").desc)
-    spark.read.parquet(out)
+    sunk
       .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
       .select(col("user_id"), col("n_events"),
         (col("sum_micro").cast("double") / 1e6).as("total_value"))
@@ -562,9 +571,9 @@ object StreamingQueries {
   private[graft] def runSessionize(spark: SparkSession, src: String,
       out: String, ckpt: String,
       schema: StructType): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
     import spark.implicits._
-    val q = stagedReader(spark, schema, src)
+    val frame = stagedReader(spark, schema, src)
       .withWatermark("ts", "30 minutes")
       .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("us"),
         col("event_id"))
@@ -605,14 +614,7 @@ object StreamingQueries {
           }
       }
       .toDF("user_id", "n_events", "start_us", "end_us")
-      .writeStream.outputMode(OutputMode.Update)
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(out)
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    val sunk = sinkAndRead(frame, out, ckpt, OutputMode.Update)
 
     // per (user, session-start): the final update is the one with the
     // largest count; the oracle's ordinal session_idx is the rank of the
@@ -621,7 +623,7 @@ object StreamingQueries {
     val wLast = Window.partitionBy("user_id", "start_us")
       .orderBy(col("n_events").desc)
     val wIdx = Window.partitionBy("user_id").orderBy(col("start_us").asc)
-    spark.read.parquet(out)
+    sunk
       .withColumn("rn", row_number().over(wLast)).filter(col("rn") === 1)
       .withColumn("session_idx", (row_number().over(wIdx) - 1).cast("long"))
       .select(col("user_id"), col("session_idx"), col("n_events"),
@@ -641,26 +643,17 @@ object StreamingQueries {
     * closed-open boundary with the batch walk's strictly-greater test. */
   def q68StreamSessionWindow(spark: SparkSession, sfDir: String)
       : DataFrame = stateful(spark, sfDir) {
-    import org.apache.spark.sql.streaming.OutputMode
     val tmp = TempDirs.create("graft_q68").toFile.getAbsolutePath
     val (src, schema) = stageEventHalves(spark, sfDir, tmp)
     val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
-    val q = stagedReader(spark, schema, src)
+    val frame = stagedReader(spark, schema, src)
       .withWatermark("ts", "30 minutes")
       .groupBy(col("user_id"),
         session_window(col("ts"), "30 minutes 1 microsecond"))
       .agg(count(lit(1)).as("n_events"),
         min("ts").as("start_ts"), max("ts").as("end_ts"))
       .select("user_id", "n_events", "start_ts", "end_ts")
-      .writeStream.outputMode(OutputMode.Append)
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(out)
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(out).orderBy("user_id", "start_ts")
+    sinkAndRead(frame, out, ckpt).orderBy("user_id", "start_ts")
   }
 
   /** q73: sliding-window aggregation in APPEND mode — overlapping
@@ -676,12 +669,11 @@ object StreamingQueries {
     * `window.end <= ms-truncated(max ts) - 1 hour`. */
   def q73StreamSlidingWindow(spark: SparkSession, sfDir: String)
       : DataFrame = stateful(spark, sfDir) {
-    import org.apache.spark.sql.streaming.OutputMode
     val tmp = TempDirs.create("graft_q73").toFile.getAbsolutePath
     val (src, schema) = stageEventHalves(spark, sfDir, tmp,
       Seq("event_type", "ts", "value"))
     val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
-    val q = stagedReader(spark, schema, src)
+    val frame = stagedReader(spark, schema, src)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "10 minutes", "5 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
@@ -689,15 +681,7 @@ object StreamingQueries {
       .select(col("window.start").as("w_start"), col("window.end").as("w_end"),
         col("event_type"), col("n_events"),
         (col("tv").cast("double") / 1e6).as("total_value"))
-      .writeStream.outputMode(OutputMode.Append)
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(out)
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(out).orderBy("w_start", "event_type")
+    sinkAndRead(frame, out, ckpt).orderBy("w_start", "event_type")
   }
 
   /** q94: CHAINED stateful operators in ONE streaming query — a 5-minute
@@ -715,12 +699,11 @@ object StreamingQueries {
     * h_end <= watermark), so emitted hours are complete — which the
     * oracle reproduces batch-side. */
   def q94ChainedWindows(spark: SparkSession, sfDir: String): DataFrame = stateful(spark, sfDir) {
-    import org.apache.spark.sql.streaming.OutputMode
     val tmp = TempDirs.create("graft_q94").toFile.getAbsolutePath
     val (src, schema) = stageEventHalves(spark, sfDir, tmp,
       Seq("event_type", "ts"))
     val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
-    val q = stagedReader(spark, schema, src)
+    val frame = stagedReader(spark, schema, src)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n5"))
@@ -730,15 +713,7 @@ object StreamingQueries {
       .select(col("window.start").as("h_start"), col("window.end").as("h_end"),
         col("event_type"), col("n_events"), col("peak_5min"),
         col("n_5min_windows"))
-      .writeStream.outputMode(OutputMode.Append)
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(out)
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(out).orderBy("h_start", "event_type")
+    sinkAndRead(frame, out, ckpt).orderBy("h_start", "event_type")
   }
 
   /** q52: stream-stream interval join — sparse "trade" events joined to
@@ -776,20 +751,12 @@ object StreamingQueries {
         col("value").as("close"), col("event_id").as("rid"))
       .withWatermark("rts", "1 hour")
       .withColumn("rbucket", floor(unix_micros(col("rts")) / bucketMicros))
-    val q = l.join(r,
+    val frame = l.join(r,
         col("ticker") === col("rticker") && col("bucket") === col("rbucket") &&
           col("rts") >= col("ts") - expr("INTERVAL 2 HOURS") &&
           col("rts") <= col("ts"))
       .select("event_id", "ticker", "ts", "rts", "close", "rid")
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(out)
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(out).orderBy("event_id", "rid")
+    sinkAndRead(frame, out, ckpt).orderBy("event_id", "rid")
   }
 
   /** q60: stream-stream LEFT OUTER interval join — q52's shape plus the
@@ -828,21 +795,13 @@ object StreamingQueries {
         col("value").as("close"), col("event_id").as("rid"))
       .withWatermark("rts", "1 hour")
       .withColumn("rbucket", floor(unix_micros(col("rts")) / bucketMicros))
-    val q = l.join(r,
+    val frame = l.join(r,
         col("ticker") === col("rticker") && col("bucket") === col("rbucket") &&
           col("rts") >= col("ts") - expr("INTERVAL 2 HOURS") &&
           col("rts") <= col("ts"),
         "left_outer")
       .select("event_id", "ticker", "ts", "rts", "close", "rid")
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(out)
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val sunk = spark.read.parquet(out)
+    val sunk = sinkAndRead(frame, out, ckpt)
     val matched = sunk.filter(col("rid").isNotNull)
     val unmatched = sunk.filter(col("rid").isNull)
       .select("event_id", "ticker", "ts", "rts", "close", "rid").distinct()
@@ -889,7 +848,7 @@ object StreamingQueries {
         col("event_id").as("rid"))
       .withWatermark("rts", "1 hour")
       .withColumn("rbucket", floor(unix_micros(col("rts")) / bucketMicros))
-    val q = l.join(r,
+    val frame = l.join(r,
         col("ticker") === col("rticker") && col("bucket") === col("rbucket") &&
           col("rts") >= col("ts") - expr("INTERVAL 2 HOURS") &&
           col("rts") <= col("ts"),
@@ -898,15 +857,7 @@ object StreamingQueries {
       // in-stream dedup of the per-bucket duplicate emits: stateful op
       // chained after the join, evicted by the watermark ts still carries
       .dropDuplicates("event_id", "ts")
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(out)
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(out).orderBy("event_id")
+    sinkAndRead(frame, out, ckpt).orderBy("event_id")
   }
 
   /** q90: stream-stream FULL OUTER interval join — completes the family
@@ -949,7 +900,7 @@ object StreamingQueries {
         col("value").as("close"), col("event_id").as("rid"))
       .withWatermark("rts", "1 hour")
       .withColumn("rbucket", floor(unix_micros(col("rts")) / bucketMicros))
-    val q = l.join(r,
+    val frame = l.join(r,
         col("ticker") === col("rticker") && col("bucket") === col("rbucket") &&
           col("rts") >= col("ts") - expr("INTERVAL 2 HOURS") &&
           col("rts") <= col("ts"),
@@ -957,15 +908,7 @@ object StreamingQueries {
       .select(col("event_id"),
         coalesce(col("ticker"), col("rticker")).as("ticker"),
         col("ts"), col("rts"), col("close"), col("rid"))
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(out)
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val sunk = spark.read.parquet(out)
+    val sunk = sinkAndRead(frame, out, ckpt)
     val matched = sunk.filter(col("rid").isNotNull && col("event_id").isNotNull)
     val leftNulls = sunk.filter(col("rid").isNull && col("event_id").isNotNull)
       .distinct()
@@ -997,18 +940,10 @@ object StreamingQueries {
     val src2 = stagedOnce(s"q53|$sfDir") { dir =>
       ev.union(ev).coalesce(2).write.parquet(dir)
     }
-    val q = spark.readStream.schema(ev.schema).parquet(src2)
+    val frame = spark.readStream.schema(ev.schema).parquet(src2)
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(out)
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(out)
+    sinkAndRead(frame, out, ckpt)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_events"),
         (sum(col("vmicro")).cast("double") / 1e6).as("total_value"))
@@ -1039,15 +974,7 @@ object StreamingQueries {
         col("user_id") === col("c_custkey"))
       .select(col("c_mktsegment"),
         round(col("value") * 1e6).cast("long").as("vmicro"))
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(out)
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(out)
+    sinkAndRead(stream, out, ckpt)
       .groupBy("c_mktsegment")
       .agg(count(lit(1)).as("n_events"),
         (sum(col("vmicro")).cast("double") / 1e6).as("total_value"))
@@ -1137,7 +1064,7 @@ object StreamingQueries {
     * not support. */
   def q120TransformWithState(spark: SparkSession, sfDir: String)
       : DataFrame = stateful(spark, sfDir) {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
+    import org.apache.spark.sql.streaming.TimeMode
     import spark.implicits._
     val tmp = TempDirs.create("graft_q120").toFile.getAbsolutePath
     val ev = Tables.events(spark, sfDir)
@@ -1151,24 +1078,17 @@ object StreamingQueries {
       stageOrderedBatches(ev.withColumn("__ord", col("parity")), dir, 2)
     }
     val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
-    val q = spark.readStream.schema(ev.schema)
+    val frame = spark.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", "1").parquet(src2)
       .as[(Long, Long, Long)]
       .groupByKey(_._1)
       .transformWithState(new UserStatsTws, TimeMode.None(), OutputMode.Update(),
         implicitly[org.apache.spark.sql.Encoder[(Long, Long, Long, Long)]])
       .toDF("user_id", "n_events", "sum_micro", "n_batches")
-      .writeStream.outputMode(OutputMode.Update)
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(out)
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    val sunk = sinkAndRead(frame, out, ckpt, OutputMode.Update)
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("user_id").orderBy(col("n_events").desc)
-    spark.read.parquet(out)
+    sunk
       .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
       .select(col("user_id"), col("n_events"),
         (col("sum_micro").cast("double") / 1e6).as("total_value"),

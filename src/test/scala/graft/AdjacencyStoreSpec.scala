@@ -1,5 +1,8 @@
 package graft
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+
 import graft.queries.AnalyticsQueries
 import graft.sources.{DerivedStore, TableStore}
 
@@ -121,18 +124,25 @@ class AdjacencyStoreSpec extends SparkSpec {
         loserFiles = DerivedStore.filesFor(spark, store, fp) { dataDir =>
           loserEntered.countDown()
           // keep building until AFTER the winner has committed
-          winnerDone.await()
+          if (!winnerDone.await(2, MINUTES))
+            throw new IllegalStateException("the winner never committed")
           overwriteInto(dataDir, "part-loser.parquet")
         }
       } catch { case t: Throwable => loserErr = t })
+    // every wait below is bounded: a builder that blocks on the loser's
+    // build (a build lock on this key) fails this test by name, not the
+    // suite by its outer timeout
+    loser.setDaemon(true)
     loser.start()
-    loserEntered.await()
+    assert(loserEntered.await(2, MINUTES), "the loser never started its build")
     // the winner builds and commits version 0 while the loser is mid-build
-    val winnerFiles = DerivedStore.filesFor(spark, store, fp) { dataDir =>
-      writePart(dataDir, "part-winner.parquet")
-    }
-    winnerDone.countDown()
+    val winnerFiles =
+      try Await.result(Future(DerivedStore.filesFor(spark, store, fp) { dataDir =>
+        writePart(dataDir, "part-winner.parquet")
+      })(ExecutionContext.global), 2.minutes)
+      finally winnerDone.countDown()
     loser.join(60000)
+    assert(!loser.isAlive, "the loser's build did not finish")
     assert(loserErr == null, s"loser thread failed: $loserErr")
     assert(winnerFiles.nonEmpty)
     // the loser's CAS commit conflicts, and its retry reads the

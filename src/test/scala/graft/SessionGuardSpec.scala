@@ -23,7 +23,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - `spark.experimental` in `src/main`: nowhere but `Sessions.scala`;
   *  - a memo map (`TrieMap`, `getOrElseUpdate`, `ConcurrentHashMap`) in
   *    `src/main`: `Scaffold.scala`, plus the two maps that are not
-  *    scaffolding, listed in the test.
+  *    scaffolding, listed in the test;
+  *  - a parquet read of a path built from `sfDir` in `src/main`: nowhere
+  *    but `Tables.scala`, so every fixture read takes `Tables.raw` and
+  *    its schema memo.
   */
 class SessionGuardSpec extends AnyFunSuite {
 
@@ -32,10 +35,12 @@ class SessionGuardSpec extends AnyFunSuite {
   private val experimental = "spark" + ".experimental"
   private val memoMaps =
     Seq("Trie" + "Map", "getOrElse" + "Update", "ConcurrentHash" + "Map")
+  private val fixtureRead = ".parquet(s\"" + "$sfDir"
 
   private val root = Paths.get(sys.props("user.dir"))
   private val sessionsFile = "src/main/scala/graft/Sessions.scala"
   private val scaffoldFile = "src/main/scala/graft/sources/Scaffold.scala"
+  private val tablesFile = "src/main/scala/graft/sources/Tables.scala"
 
   /** (repo-relative path, 1-based line number, line) of every line under
     * `dir` that contains `pattern`. */
@@ -92,5 +97,10 @@ class SessionGuardSpec extends AnyFunSuite {
       assert(allowed.exists { case (f, _, l) => f == af && l.contains(frag) },
         s"allow-list entry $af / $frag matches nothing")
     }
+  }
+
+  test("fixture tables in src/main are read only through Tables") {
+    val bad = hits("src/main", fixtureRead).filterNot(_._1 == tablesFile)
+    assert(bad.isEmpty, s"read fixture tables through sources.Tables.raw:\n${show(bad)}")
   }
 }

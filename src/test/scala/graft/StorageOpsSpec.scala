@@ -407,7 +407,9 @@ class StorageOpsSpec extends SparkSpec {
             Seq(s"w${w}_$i").toDF("path"), Map("writer" -> s"w$w"))
         })
     }
-    threads.foreach(_.start()); threads.foreach(_.join())
+    threads.foreach { t => t.setDaemon(true); t.start() }
+    threads.foreach(_.join(120000))
+    assert(threads.forall(!_.isAlive), "a blind committer never finished")
     // 8 commits -> versions 0..7, each manifest readable and distinct:
     // under the pre-lock protocol two racers could claim the same
     // version and one manifest would be silently overwritten
