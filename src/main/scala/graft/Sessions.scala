@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.sources.{NoForkLocalFileSystem, NoForkLocalFs}
+
 /** The one session builder: every main, tool and spec gets its session
   * from [[Sessions.graft]], which installs `GraftExtensions` and the
   * canonical conf. Call sites add only the confs that really differ.
@@ -54,15 +56,18 @@ object Sessions {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
 
-  /** Apply the session master and install `GraftExtensions` (its SQL
-    * functions, the native as-of strategy and its optimizer rules): the
-    * master is `SPARK_GRAFT_MASTER` if set (with the executor
-    * classpath/opens conf a local-cluster needs), else the default
-    * `local[$cpus]`. A local-cluster master that does not parse (and no
-    * SPARK_GRAFT_EXECUTOR_MEM) fails LOUDLY rather than letting
-    * executors launch at the 1 GiB default. */
+  /** Apply the session master, install `GraftExtensions` (its SQL
+    * functions, the native as-of strategy and its optimizer rules) and
+    * the no-fork `file://` filesystem (`graft.sources.LocalFs`: no
+    * process per chmod or readlink). The master is `SPARK_GRAFT_MASTER`
+    * if set (with the executor classpath/opens conf a local-cluster
+    * needs), else the default `local[$cpus]`. A local-cluster master
+    * that does not parse (and no SPARK_GRAFT_EXECUTOR_MEM) fails LOUDLY
+    * rather than letting executors launch at the 1 GiB default. */
   def withMaster(b: SparkSession.Builder, cpus: String): SparkSession.Builder =
-    applyMaster(b.withExtensions(new GraftExtensions),
+    applyMaster(b.withExtensions(new GraftExtensions)
+        .config("spark.hadoop.fs.file.impl", classOf[NoForkLocalFileSystem].getName)
+        .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NoForkLocalFs].getName),
       sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"),
       sys.env.get("SPARK_GRAFT_EXECUTOR_MEM"))
 

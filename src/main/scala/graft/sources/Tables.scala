@@ -92,13 +92,14 @@ object Tables {
   private def schemaKey(spark: SparkSession, path: String): Option[SchemaKey] = {
     val p = new Path(path)
     val listing = try {
-      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
-      val files = Seq.newBuilder[(String, Long, Long)]
-      while (it.hasNext) {
-        val f = it.next()
-        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // listStatus, not listFiles: a LocatedFileStatus copies each file's
+      // permission, which the local filesystem reads by forking `ls`
+      def files(dir: Path): Seq[(String, Long, Long)] = fs.listStatus(dir).toSeq.flatMap { f =>
+        if (f.isDirectory) files(f.getPath)
+        else Seq((f.getPath.toString, f.getLen, f.getModificationTime))
       }
-      files.result().sorted
+      files(p).sorted
     } catch { case _: IOException => Nil }
     if (listing.isEmpty) None
     else {
