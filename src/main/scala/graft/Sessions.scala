@@ -56,18 +56,45 @@ object Sessions {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
 
+  /** Entries of Spark's generated-class cache (`CodeGenerator.cache`,
+    * an LRU keyed on the thread's context class loader and the code
+    * body; Spark's default is 100). A working set larger than the cache
+    * misses on almost every lookup when it is visited in a cycle, and
+    * Janino compiles the same classes again and again: the benchmark's
+    * dashboard cycles through about 470 keys per round. One
+    * `graft.Verify` pass over every registered query compiles 2,507
+    * distinct keys when nothing is evicted (1,597 bodies, 910 of them
+    * once on a driver thread and once in the executor's class loader),
+    * so this size holds the whole registry with room to grow. Entries
+    * cost metaspace only when a workload compiles that many classes. */
+  val codegenCacheEntries: Int = 4000
+
   /** Apply the session master, install `GraftExtensions` (its SQL
-    * functions, the native as-of strategy and its optimizer rules) and
-    * the no-fork `file://` filesystem (`graft.sources.LocalFs`: no
-    * process per chmod or readlink). The master is `SPARK_GRAFT_MASTER`
-    * if set (with the executor classpath/opens conf a local-cluster
-    * needs), else the default `local[$cpus]`. A local-cluster master
-    * that does not parse (and no SPARK_GRAFT_EXECUTOR_MEM) fails LOUDLY
-    * rather than letting executors launch at the 1 GiB default. */
+    * functions, the native as-of strategy and its optimizer rules), the
+    * no-fork `file://` filesystem (`graft.sources.LocalFs`: no process
+    * per chmod or readlink), and compile-once code generation:
+    *  - `spark.sql.codegen.cache.maxEntries` is [[codegenCacheEntries]]
+    *    (a static conf: the first session of a JVM fixes it);
+    *  - `spark.sql.artifact.isolation.enabled` is false. With isolation
+    *    on, every job carries its session's UUID and the executor
+    *    builds one class loader per UUID; `writeStream.start()` clones
+    *    the session under a new UUID, so every stream would compile
+    *    its task-side classes again in a fresh loader. The engine adds
+    *    no session artifacts (jars, classes, files), so there is
+    *    nothing to isolate; a deployment that does (Spark Connect) must
+    *    turn isolation back on (DEPLOY.md).
+    *
+    * The master is `SPARK_GRAFT_MASTER` if set (with the executor
+    * classpath/opens conf a local-cluster needs), else the default
+    * `local[$cpus]`. A local-cluster master that does not parse (and no
+    * SPARK_GRAFT_EXECUTOR_MEM) fails LOUDLY rather than letting
+    * executors launch at the 1 GiB default. */
   def withMaster(b: SparkSession.Builder, cpus: String): SparkSession.Builder =
     applyMaster(b.withExtensions(new GraftExtensions)
         .config("spark.hadoop.fs.file.impl", classOf[NoForkLocalFileSystem].getName)
-        .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NoForkLocalFs].getName),
+        .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NoForkLocalFs].getName)
+        .config("spark.sql.codegen.cache.maxEntries", codegenCacheEntries.toLong)
+        .config("spark.sql.artifact.isolation.enabled", "false"),
       sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"),
       sys.env.get("SPARK_GRAFT_EXECUTOR_MEM"))
 

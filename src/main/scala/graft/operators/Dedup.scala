@@ -445,8 +445,7 @@ object Dedup {
     // scans in the r18 plan audit). Bounded by the candidate count at
     // any scale; never the corpus-scale shingle arrays (r18's reverted
     // 4x-at-sf1 mistake).
-    val cand = cand0
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cand = persistOnce(cand0)
     val candDocs = cand.select(col("ia").as("doc"))
       .union(cand.select(col("ib").as("doc"))).distinct()
     val docShingles = s.join(candDocs, Seq("doc"), "left_semi")
@@ -460,6 +459,14 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
       .select("ia", "ib", "jaccard")
   }
+
+  /** `df` persisted lazily (memory, then disk), unless an earlier call
+    * already cached the identical plan: a second `persist` would only
+    * make Spark warn that the data is already cached and keep the
+    * entry it has, which this frame then reads. */
+  private def persistOnce(df: DataFrame): DataFrame =
+    if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) df
+    else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** MinHash + LSH banded near-dup detection: k minhashes in `bands`
     * bands of k/bands rows; docs sharing any band bucket become
@@ -475,8 +482,7 @@ object Dedup {
     // (the r18 AQE-finalized q22 plan still executed 14 scans). This
     // is the sub-corpus-scale frame the r18 revert (67cb8b6) said to
     // keep: memory is O(docs · bands), never the shingle arrays.
-    val bandHash = minhashBandTable(docs, idCol, textCol, k, bands)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val bandHash = persistOnce(minhashBandTable(docs, idCol, textCol, k, bands))
     val cand = bandHash.as("x").join(bandHash.as("y"),
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
           col("x.doc") < col("y.doc"))

@@ -211,7 +211,7 @@ object Similarity {
     * members keeps its previous position. Cosine is scale-invariant, so
     * means are not re-normalized. Returns (cid, cv) ready for
     * [[ivfTopK]] / [[cosineNearDupPairs]] `centroids` (as vec_id,
-    * embedding).
+    * embedding), as a local checkpoint: nothing is left cached.
     */
   def trainCentroids(corpus: DataFrame, k: Int, iters: Int): DataFrame = {
     var cents = corpus.orderBy("vec_id").limit(k)
@@ -236,7 +236,19 @@ object Similarity {
       cents.unpersist()
       cents = next
     }
-    cents.select(col("cid").as("vec_id"), col("cv").as("embedding"))
+    released(cents).select(col("cid").as("vec_id"), col("cv").as("embedding"))
+  }
+
+  /** The trained frame, out of the cache: its rows as a local checkpoint
+    * (lineage cut, so reading it never retrains) and its cache entry
+    * dropped. No caller unpersists a returned frame, so a cached one
+    * would stay for the life of the JVM, and the next training on the
+    * same corpus would ask to cache the identical plan again. The
+    * checkpoint's blocks go when the returned frame is unreachable. */
+  private def released(trained: DataFrame): DataFrame = {
+    val out = trained.localCheckpoint()
+    trained.unpersist()
+    out
   }
 
   /** Bucket assignment for a PERSISTABLE IVF index: every corpus
@@ -454,7 +466,7 @@ object Similarity {
       cents = next
     }
     sliced.unpersist()
-    cents
+    released(cents)
   }
 
   /** PQ top-k with asymmetric-distance scan + exact rerank — the

@@ -789,14 +789,20 @@ object SourceQueries {
   /** The delete as a commit. Planning always runs against the BASE
     * (version-0) snapshot so repeated invocations rewrite the same
     * deterministic file set; each invocation commits a fresh version
-    * (immutable manifests — the old ones stay readable). Returns
-    * (base snapshot, committed snapshot, rewritten files, total files,
-    * deleted keys). */
+    * (immutable manifests). The commit then reclaims every version no
+    * live manifest names, so N invocations keep a bounded store, not N
+    * rewrite generations: kept are the base (every delete is planned
+    * against it), the new version, and its parent (a reader that
+    * pinned the current version before this commit keeps reading it).
+    * Returns (base snapshot, committed snapshot, rewritten files, total
+    * files, deleted keys). */
   def q151Commit(spark: SparkSession, sfDir: String)
       : (TableStore.Snapshot, TableStore.Snapshot, Int, Int, Array[Long]) = {
     val store = q151StoreDir(spark, sfDir)
     val keys = q151Keys(spark, sfDir)
     val (base, committed, picked, total) = deleteFromBase(spark, store, keys)
+    if (committed.version > 1)
+      TableStore.vacuum(spark, store, retain = 2, keep = Set(base.version))
     (base, committed, picked, total, keys)
   }
 

@@ -169,25 +169,34 @@ object TableStore {
     * manifests that referenced them are gone, so a crash mid-vacuum
     * still leaves every retained version fully readable. Readers pinned
     * beyond the horizon are the same contract as every table format's
-    * VACUUM: retention must exceed the longest running read. Returns
-    * (dropped manifest versions, deleted data files). */
-  def vacuum(spark: SparkSession, dir: String, retain: Int): (Int, Int) = {
+    * VACUUM: retention must exceed the longest running read. Versions
+    * in `keep` are retained wherever they fall (a base version other
+    * commits are planned against). Returns (dropped manifest versions,
+    * deleted data files). */
+  def vacuum(spark: SparkSession, dir: String, retain: Int,
+             keep: Set[Long] = Set.empty): (Int, Int) = {
     require(retain >= 1, "must retain at least the current version")
     val cur = currentVersion(dir).getOrElse(
       sys.error(s"TableStore: no committed version in $dir"))
     val horizon = math.max(0L, cur - retain + 1)
     val manifestsDir = Paths.get(dir, "manifests")
-    val dropped = Files.list(manifestsDir).iterator().asScala.toSeq
-      .filter { p =>
+    val versions = Files.list(manifestsDir).iterator().asScala.toSeq
+      .flatMap { p =>
         val n = p.getFileName.toString
-        n.startsWith("m") && !n.contains(".") &&
-          n.drop(1).forall(_.isDigit) && n.drop(1).toLong < horizon
+        if (n.startsWith("m") && n.length > 1 && n.drop(1).forall(_.isDigit))
+          Some(n.drop(1).toLong -> p)
+        else None
       }
+    val dropped = versions.collect {
+      case (v, p) if v < horizon && !keep(v) => p
+    }
     // manifests record Hadoop-style file URIs; vacuum walks local
     // paths — normalize both to the bare filesystem path
     def norm(s: String): String =
       if (s.startsWith("file:")) new java.net.URI(s).getPath else s
-    val retainedPaths = (horizon to cur).flatMap(v =>
+    val retained = (horizon to cur) ++ keep.filter(v => v < horizon &&
+      versions.exists(_._1 == v))
+    val retainedPaths = retained.flatMap(v =>
       filePaths(spark, Snapshot(dir, v))).map(norm).toSet
     dropped.foreach { m =>
       TempDirs.deleteRecursively(m)

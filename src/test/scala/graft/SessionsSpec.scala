@@ -22,6 +22,9 @@ class SessionsSpec extends SparkSpec {
       "spark.sql.legacy.parquet.nanosAsLong" -> "true",
       "spark.sql.adaptive.enabled" -> "true",
       "spark.ui.enabled" -> "false",
+      // compile-once code generation (CodegenReuseSpec)
+      "spark.sql.codegen.cache.maxEntries" -> Sessions.codegenCacheEntries.toString,
+      "spark.sql.artifact.isolation.enabled" -> "false",
     ).foreach { case (k, v) => assert(spark.conf.get(k) == v, k) }
   }
 

@@ -336,6 +336,33 @@ class StorageOpsSpec extends SparkSpec {
     assert(TableStore.snapshot(store).version >= committed.version)
   }
 
+  test("q151 commits keep only the generations a live manifest names") {
+    val store = SourceQueries.q151StoreDir(spark, sf("sf0.01"))
+    def listed(sub: String, prefix: String): Set[Long] = {
+      val d = new java.io.File(s"$store/$sub")
+      Option(d.list()).toSeq.flatten.collect {
+        case n if n.startsWith(prefix) && n.drop(prefix.length).nonEmpty &&
+            n.drop(prefix.length).forall(_.isDigit) => n.drop(prefix.length).toLong
+      }.toSet
+    }
+    val commits = (1 to 3).map(_ => SourceQueries.q151Commit(spark, sf("sf0.01")))
+    val cur = commits.last._2.version
+    assert(cur >= 3L, s"three deletes must commit three versions: at $cur")
+    // the base (every delete plans against it), the current version and
+    // its parent; every older rewrite generation is reclaimed
+    assert(listed("manifests", "m") == Set(0L, cur - 1, cur),
+      s"manifests: ${listed("manifests", "m")}")
+    assert(listed("files", "rw") == Set(cur - 1, cur),
+      s"rewrite generations: ${listed("files", "rw")}")
+    // both kept snapshots still read whole, with the keys deleted
+    val keys = commits.last._5.map(Long.box)
+    Seq(cur - 1, cur).foreach { v =>
+      val s = TableStore.Snapshot(store, v)
+      assert(SourceQueries.q151ReadSnapshot(spark, s)
+        .filter(col("l_orderkey").isin(keys: _*)).count() == 0)
+    }
+  }
+
   test("TableStore: manifests and meta are immutable per version, pointer flip is last") {
     import spark.implicits._
     val dir = graft.sources.TempDirs.create("ts_spec").toString
