@@ -89,5 +89,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
     ext.injectOptimizerRule(_ => graft.plans.PruneAsofRightColumns)
     ext.injectOptimizerRule(_ => graft.plans.PushFilterThroughAsof)
+    ext.injectQueryPostPlannerStrategyRule(_ => graft.plans.PlanSingleSplitScans)
   }
 }

@@ -306,7 +306,7 @@ object Dedup {
     // SLOWER at both scales: q21 sf0.1 2.62→3.7 median, sf1
     // steady-trial 17→22 s. Contrast minhashLshPairs/jaccardVerify,
     // where the duplicated subtrees are NOT exchange-identical and the
-    // same persist wins — the deciding question is whether reuse
+    // same materialization wins — the deciding question is whether reuse
     // already covers the duplication, not how many scans the unexecuted
     // plan prints.
     val cand = st.rawCandidates.distinct()
@@ -437,15 +437,14 @@ object Dedup {
     // xxhash64 collisions within one doc pair (~2^-64 per shingle
     // pair), and the gathered arrays shed ~3x their bytes
     val s = s0.select(col("doc"), xxhash64(col("sh")).as("sh"))
-    // candidate pairs persisted (lazy), same rationale as the q21
-    // prefix path: (ia, ib) is the small frame, and it is referenced
-    // THREE times here (two sides of candDocs + the verify spine) —
-    // each reference re-derived the whole candidate-generation subtree
-    // (q22: the banded self-join twice per reference, 24 documents
-    // scans in the r18 plan audit). Bounded by the candidate count at
-    // any scale; never the corpus-scale shingle arrays (r18's reverted
-    // 4x-at-sf1 mistake).
-    val cand = persistOnce(cand0)
+    // candidate pairs materialized once, as the band table is in
+    // minhashLshPairs: (ia, ib) is the small frame, and it is referenced THREE times here (two sides
+    // of candDocs + the verify spine) — each reference re-derived the
+    // whole candidate-generation subtree (q22: the banded self-join
+    // twice per reference, 24 documents scans in the r18 plan audit).
+    // Bounded by the candidate count at any scale; never the
+    // corpus-scale shingle arrays (r18's reverted 4x-at-sf1 mistake).
+    val cand = cand0.localCheckpoint()
     val candDocs = cand.select(col("ia").as("doc"))
       .union(cand.select(col("ib").as("doc"))).distinct()
     val docShingles = s.join(candDocs, Seq("doc"), "left_semi")
@@ -460,29 +459,27 @@ object Dedup {
       .select("ia", "ib", "jaccard")
   }
 
-  /** `df` persisted lazily (memory, then disk), unless an earlier call
-    * already cached the identical plan: a second `persist` would only
-    * make Spark warn that the data is already cached and keep the
-    * entry it has, which this frame then reads. */
-  private def persistOnce(df: DataFrame): DataFrame =
-    if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) df
-    else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
   /** MinHash + LSH banded near-dup detection: k minhashes in `bands`
     * bands of k/bands rows; docs sharing any band bucket become
     * candidate pairs; candidates are verified with exact Jaccard.
     * Returns (ia, ib, jaccard) for verified pairs >= threshold. */
   def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
                       k: Int, bands: Int, threshold: Double): DataFrame = {
-    // The band table IS persisted (lazy) since optimization r19: it is
+    // The band table IS materialized once since optimization r19: it is
     // a few dozen bytes per document (doc, band, bh — the PERSISTABLE
     // index, per its own doc), referenced twice by the candidate
     // self-join, and each reference re-derived the full scan → shingle
     // → md5 → minhash aggregation. Exchange reuse did NOT cover it
     // (the r18 AQE-finalized q22 plan still executed 14 scans). This
     // is the sub-corpus-scale frame the r18 revert (67cb8b6) said to
-    // keep: memory is O(docs · bands), never the shingle arrays.
-    val bandHash = persistOnce(minhashBandTable(docs, idCol, textCol, k, bands))
+    // keep: memory is O(docs · bands), never the shingle arrays. A local
+    // checkpoint (memory, then disk), as `Similarity` returns its trained
+    // frames, not a persist: a persist registered the plan with the
+    // session's cache manager, which nothing released, so each distinct
+    // corpus kept its entries for the life of the JVM; the checkpoint's
+    // blocks go when the query is unreachable. It is eager: it runs when
+    // the query is built.
+    val bandHash = minhashBandTable(docs, idCol, textCol, k, bands).localCheckpoint()
     val cand = bandHash.as("x").join(bandHash.as("y"),
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
           col("x.doc") < col("y.doc"))

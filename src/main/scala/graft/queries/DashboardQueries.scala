@@ -137,7 +137,11 @@ object DashboardQueries {
     * the first day with positive holdings. */
   def q11TwrIndex(spark: SparkSession, sfDir: String): DataFrame = {
     val panel = pricePanel(spark, sfDir)
-    val qty = positionSeries(spark, sfDir)
+    // broadcast in the initial plan while the input is small: planned as
+    // a sort-merge join, adaptive execution made it a broadcast join
+    // only if the position side's broadcasts finished before the panel's
+    // shuffle stage was created, so the job count varied between runs
+    val qty = Tables.dimBroadcast(positionSeries(spark, sfDir))
     val j = panel.join(qty.withColumnRenamed("qty", "pos_qty"), Seq("ticker", "ts"), "left")
       .withColumn("pos_qty", coalesce(col("pos_qty"), lit(0.0)))
     val wt = Window.partitionBy("ticker").orderBy("rn")
@@ -148,16 +152,20 @@ object DashboardQueries {
       sum(when(col("hold_val").isNull, 0L)
         .otherwise(round(col("hold_val") * 1e6).cast("long")))
         .over(Window.partitionBy("ts")).cast("double") / 1e6)
-    val fhd = t.filter(col("tot_val") > 0).agg(min("ts").as("fhd"))
-    val r = t.join(broadcast(fhd)).filter(col("ts") >= col("fhd"))
-      .groupBy("ts")
+    // one row per day (tot_val is constant within a day); the days from
+    // the first with positive holdings on are those where a running max
+    // of that flag is set, so `t` is computed once, not again in a
+    // separate branch for the first such day
+    val upToDay = Window.orderBy("ts").rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val r = t.groupBy("ts")
       .agg(sum(when(col("hold_val").isNull || col("tot_val") === 0, 0L)
         .otherwise(round(col("hold_val") / col("tot_val") * col("ret") * 1e12).cast("long")))
-        .as("pr_l"))
+        .as("pr_l"),
+        max("tot_val").as("tot_val"))
+      .withColumn("held", max((col("tot_val") > 0).cast("int")).over(upToDay))
+      .filter(col("held") === 1)
     r.select(col("ts"),
-        (exp(sum(log(lit(1.0) + col("pr_l").cast("double") / 1e12))
-          .over(Window.orderBy("ts")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow))) * 100.0)
+        (exp(sum(log(lit(1.0) + col("pr_l").cast("double") / 1e12)).over(upToDay)) * 100.0)
           .as("twr_index"))
       .orderBy("ts")
   }

@@ -28,7 +28,10 @@ import org.apache.spark.sql.types.StructType
   * immutable tables on every request. [[raw]] infers each table's schema
   * once per (path, listing, parquet confs) and reads with it, so
   * building a query launches no job. Any rewritten file or changed conf
-  * is a new key and is inferred again.
+  * is a new key and is inferred again. The resolved frame itself (for
+  * [[events]], the normalized one) is memoized under the same key and
+  * the session, so a request that reads one table several times lists
+  * it, but resolves and analyzes it only once per session.
   */
 object Tables {
 
@@ -66,13 +69,26 @@ object Tables {
   }
 
   /** A fixture table, read with its memoized schema (see `schemas`). */
-  def raw(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+  def raw(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    resolved(spark, sfDir, name, rawFrames)(identity)
+
+  /** `f` over the fixture table `name`, served from `site` while the
+    * table's [[SchemaKey]] is unchanged. The frame's relation carries the
+    * listing and the confs it was resolved with, which are the key, and
+    * its session, which is the key's other half: a frame is only served
+    * to the session that resolved it, never to another session with its
+    * own confs and catalog. Memoized frames keep their session alive;
+    * a JVM holds a handful of sessions, and one frame per fixture each. */
+  private def resolved(spark: SparkSession, sfDir: String, name: String,
+                       site: Scaffold[(SchemaKey, SparkSession), DataFrame])
+                      (f: DataFrame => DataFrame): DataFrame = {
     val path = s"$sfDir/$name.parquet"
     schemaKey(spark, path) match {
-      case Some(key) =>
-        spark.read.schema(schemas.once(key)(spark.read.parquet(path).schema)).parquet(path)
+      case Some(key) => site.once((key, spark)) {
+        f(spark.read.schema(schemas.once(key)(spark.read.parquet(path).schema)).parquet(path))
+      }
       // missing or empty: the plain read raises its usual error
-      case None => spark.read.parquet(path)
+      case None => f(spark.read.parquet(path))
     }
   }
 
@@ -88,6 +104,10 @@ object Tables {
   private type SchemaKey = (String, Seq[(String, Long, Long)], Seq[(String, String)])
 
   private val schemas = Scaffold.values[SchemaKey, StructType]
+
+  /** Resolved frames of [[raw]] and normalized ones of [[events]]. */
+  private val rawFrames = Scaffold.values[(SchemaKey, SparkSession), DataFrame]
+  private val eventFrames = Scaffold.values[(SchemaKey, SparkSession), DataFrame]
 
   private def schemaKey(spark: SparkSession, path: String): Option[SchemaKey] = {
     val p = new Path(path)
@@ -177,7 +197,7 @@ object Tables {
     * DuckDB), whichever physical type the parquet carries. */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeTs(raw(spark, sfDir, "events"))
+    resolved(spark, sfDir, "events", eventFrames)(normalizeTs)
   }
 
   /** The reference's `trades` ledger (db.py:40-49) re-expressed over

@@ -236,6 +236,12 @@ class AsofBucketingSpec extends SparkSpec {
         spark.table("graft_li_b").join(spark.table("graft_o_b"), "l_orderkey")))
       // the aggregation on the bucket key also needs no new exchange
       assert(Bucketing.isShuffleFree(joined))
+      // and the single-split rule leaves both bucketed scans unwrapped,
+      // though each is one small file per bucket
+      joined.collect()
+      val plan = joined.queryExecution.executedPlan.toString
+      assert("SelectedBucketsCount: 8 out of 8".r.findAllIn(plan).size >= 2, plan)
+      assert(!plan.contains("SingleSplitScan"), plan)
       // sanity: same row count as the unbucketed join
       val expect = li.join(o, li("l_orderkey") === o("o_orderkey")).count()
       assert(spark.table("graft_li_b").join(spark.table("graft_o_b"), "l_orderkey").count() == expect)

@@ -40,16 +40,6 @@ class CboStatsSpec extends SparkSpec {
     }
   }
 
-  private def withConfs(kvs: (String, String)*)(body: => Unit): Unit = {
-    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   test("column stats flip a filtered-dim join to broadcast; no stats, no flip") {
     tables
     def q(custTable: String): DataFrame =

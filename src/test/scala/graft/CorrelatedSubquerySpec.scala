@@ -28,12 +28,13 @@ class CorrelatedSubquerySpec extends SparkSpec {
   }
 
   test("q126 scans the fact table once — the total reuses the grouped exchange") {
-    val df = AnalyticsQueries.q126GlobalThreshold(spark, sf())
-    df.collect()
     // AQE's toString appends the pre-adaptive "Initial Plan" — count
     // scans only in the final plan, which is what actually executed
-    val plan = df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
+    val plan = withSplitInputs {
+      val df = AnalyticsQueries.q126GlobalThreshold(spark, sf())
+      df.collect()
+      df.queryExecution.executedPlan.toString
+    }.split("== Initial Plan ==")(0)
     // the per-supplier aggregate and the global total share one
     // exchange over one scan: the second reference must be a reuse,
     // not a second read of the fact table

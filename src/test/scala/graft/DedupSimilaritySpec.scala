@@ -266,29 +266,28 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("LSH pipeline persists only the sub-corpus-scale frames (band table, pairs)") {
-    // Optimization r19 (VERDICT r18 #2): minhashLshPairs persists the
-    // band table and jaccardVerify the candidate pairs — the frames
+    // Optimization r19 (VERDICT r18 #2): minhashLshPairs materializes
+    // the band table and jaccardVerify the candidate pairs — the frames
     // bounded by docs·bands / candidate count at any scale — so their
-    // multiple consumers read the cache instead of re-deriving the
+    // multiple consumers read them once instead of re-deriving the
     // scan→shingle→minhash subtree (24 scans in the r18 q22 plan
-    // audit). This pins (a) the executed plan actually reuses the
-    // caches, and (b) the corpus-scale shingle arrays are NOT cached
-    // (the r18 persist-everything experiment lost 4x at sf1 and was
-    // reverted in 67cb8b6).
+    // audit). This pins (a) the executed plan reads both from their
+    // local checkpoints, (b) the corpus-scale shingle arrays are NOT
+    // materialized (the r18 persist-everything experiment lost 4x at
+    // sf1 and was reverted in 67cb8b6), and (c) nothing stays in the
+    // session's cache once the query has run.
     spark.sharedState.cacheManager.clearCache()
-    val docs = graft.sources.Tables.documents(spark, sf())
-    val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text", 16, 4, 0.8)
+    val pairs = graft.queries.PipelineQueries.q22MinhashLsh(spark, sf())
     pairs.queryExecution.toRdd.foreach(_ => ()) // finalize AQE in place
     val plan = pairs.queryExecution.executedPlan.toString
-    assert(plan.contains("InMemoryTableScan"),
-      "band table / candidate pairs must be read from cache on reuse")
-    // nothing corpus-scale is pinned: every cache read is the band
+    val checkpointScans = plan.linesIterator.filter(_.contains("Scan ExistingRDD")).toSeq
+    assert(checkpointScans.nonEmpty,
+      s"band table / candidate pairs must be read from their checkpoints:\n$plan")
+    // nothing corpus-scale is pinned: every checkpoint read is the band
     // table (doc, band, bh) or the pair table (ia, ib) — never a frame
     // carrying the gathered shingle-array column (shs)
-    val arrayCache = plan.linesIterator
-      .filter(_.contains("InMemoryTableScan")).filter(_.contains("shs"))
-    assert(arrayCache.isEmpty, "no corpus-scale array cache")
-    spark.sharedState.cacheManager.clearCache()
+    assert(!checkpointScans.exists(_.contains("shs")), "no corpus-scale array checkpoint")
+    assert(spark.sharedState.cacheManager.isEmpty, "q22 left a cache entry")
   }
 
   test("incremental LSH equals the from-scratch pairs restricted to the new batch") {

@@ -13,8 +13,8 @@ import graft.sources.Tables
 class RetentionPlanSpec extends SparkSpec {
 
   test("q114 plans exactly one user-keyed exchange and no join") {
-    val plan = EventsQueries.q114RetentionCohorts(spark, sf())
-      .queryExecution.executedPlan.toString
+    val plan = withSplitInputs(EventsQueries.q114RetentionCohorts(spark, sf())
+      .queryExecution.executedPlan.toString)
     val userExchanges =
       "Exchange hashpartitioning\\(user_id".r.findAllIn(plan).length
     assert(userExchanges == 1,

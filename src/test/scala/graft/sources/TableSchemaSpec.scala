@@ -2,28 +2,24 @@ package graft.sources
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.nio.file.attribute.FileTime
-import java.util.UUID
 import java.util.concurrent.{CountDownLatch, Executors}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.SparkThrowable
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.LongType
 
 import graft.SparkSpec
 
-/** Pins `Tables.raw`'s schema memo: a fixture table's schema is
-  * inferred by one Spark job per (path, listing, parquet confs) and then
-  * served with no job, it equals what a plain read infers, and a
+/** Pins `Tables.raw`'s schema and frame memos: a fixture table's schema
+  * is inferred by one Spark job per (path, listing, parquet confs) and
+  * then served with no job, it equals what a plain read infers, and a
   * rewritten file, a changed conf or a missing path never gets a stale
-  * schema. Every test works on a fresh copy of the fixture, so its keys
+  * schema or frame; a frame is resolved once per key and session. Every test works on a fresh copy of the fixture, so its keys
   * are cold and the fixture itself is never written. */
 class TableSchemaSpec extends SparkSpec {
 
@@ -36,30 +32,6 @@ class TableSchemaSpec extends SparkSpec {
     tables.foreach(t => Files.copy(
       Paths.get(sf(), s"$t.parquet"), dir.resolve(s"$t.parquet")))
     dir.toString
-  }
-
-  /** `f`'s result and the number of Spark jobs it launched, counting only
-    * jobs tagged with this call's local property (inherited by threads
-    * `f` starts), so jobs of anything else in the JVM are not counted. */
-  private def jobsDuring[T](f: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val tag = UUID.randomUUID().toString
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("graft.spec.jobTag") == tag))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty("graft.spec.jobTag", tag)
-    try {
-      val out = f
-      bridge.drainListenerBus(spark)
-      (out, jobs.get)
-    } finally {
-      sc.setLocalProperty("graft.spec.jobTag", null)
-      sc.removeSparkListener(listener)
-    }
   }
 
   test("the first events read on a fresh copy launches 1 job, the second 0") {
@@ -122,6 +94,34 @@ class TableSchemaSpec extends SparkSpec {
     finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     assert(jobsDuring(Tables.raw(spark, dir, "orders"))._2 == 0,
       "the restored conf is the first key again")
+  }
+
+  test("one resolved frame per session and key: a rewrite or a conf change resolves again") {
+    val dir = freshCopy()
+    val events = Tables.events(spark, dir)
+    assert(Tables.events(spark, dir) eq events)
+    val orders = Tables.raw(spark, dir, "orders")
+    assert(Tables.raw(spark, dir, "orders") eq orders)
+    // another session resolves its own frame and never gets this one
+    val other = spark.newSession()
+    val theirs = Tables.events(other, dir)
+    assert(!(theirs eq events) && (theirs.sparkSession eq other))
+    assert(Tables.events(other, dir) eq theirs)
+    assert(Tables.events(spark, dir) eq events)
+    // a changed parquet conf is a new frame; the restored conf the old one
+    val key = "spark.sql.parquet.binaryAsString"
+    val prev = spark.conf.getAll.get(key)
+    spark.conf.set(key, (!spark.conf.get(key).toBoolean).toString)
+    try assert(!(Tables.raw(spark, dir, "orders") eq orders))
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(Tables.raw(spark, dir, "orders") eq orders)
+    // a rewritten file (here: a new modification time) is a new frame
+    val path = Paths.get(dir, "orders.parquet")
+    Files.setLastModifiedTime(path,
+      FileTime.fromMillis(Files.getLastModifiedTime(path).toMillis + 60000L))
+    val rewritten = Tables.raw(spark, dir, "orders")
+    assert(!(rewritten eq orders))
+    assert(rewritten.count() == orders.count())
   }
 
   test("a missing table throws the same error as a plain read") {
