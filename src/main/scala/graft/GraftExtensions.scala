@@ -18,7 +18,9 @@ import graft.functions.{BottomK, CountMinAgg, CountMinMergeAgg, FloatVecDot}
   * (codegen'd quantized dot product), `zorder2(a, b)` (codegen'd
   * Morton interleave), `pcm_fold(content)` (single-pass PCM WAV
   * sample stats); plus the native as-of
-  * join (graft.plans.AsofJoinNode/Exec + its pruning/pushdown rules).
+  * join (graft.plans.AsofJoinNode/Exec + its pruning/pushdown rules),
+  * the single-split scan rule (graft.plans.PlanSingleSplitScans) and
+  * each session's fixture-frame memo (graft.sources.SessionFrames).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -90,5 +92,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => graft.plans.PruneAsofRightColumns)
     ext.injectOptimizerRule(_ => graft.plans.PushFilterThroughAsof)
     ext.injectQueryPostPlannerStrategyRule(_ => graft.plans.PlanSingleSplitScans)
+    // built once per session state: the session's own fixture-frame memo
+    ext.injectCheckRule(_ => new graft.sources.SessionFrames)
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 import graft.operators.TimeSeries
+import graft.plans.PlanSingleSplitScans
 
 /** Dashboard time-series queries (SURVEY §2.11 Q8-Q12): the reference's
   * price-panel -> returns -> TWR chain (1_Dashboard.py:64-356)
@@ -137,11 +138,16 @@ object DashboardQueries {
     * the first day with positive holdings. */
   def q11TwrIndex(spark: SparkSession, sfDir: String): DataFrame = {
     val panel = pricePanel(spark, sfDir)
-    // broadcast in the initial plan while the input is small: planned as
-    // a sort-merge join, adaptive execution made it a broadcast join
-    // only if the position side's broadcasts finished before the panel's
-    // shuffle stage was created, so the job count varied between runs
-    val qty = Tables.dimBroadcast(positionSeries(spark, sfDir))
+    // broadcast in the initial plan while every input reads as one split:
+    // planned as a sort-merge join, adaptive execution made it a
+    // broadcast join only if the position side's broadcasts finished
+    // before the panel's shuffle stage was created, so the job count
+    // varied between runs. Not at scale: the days x tickers grid is as
+    // large as the panel it joins, so Spark's size checks decide there.
+    val pos = positionSeries(spark, sfDir)
+    val qty = if (PlanSingleSplitScans.inputsReadAsOneSplit(pos.queryExecution.analyzed)) {
+      broadcast(pos)
+    } else pos
     val j = panel.join(qty.withColumnRenamed("qty", "pos_qty"), Seq("ticker", "ts"), "left")
       .withColumn("pos_qty", coalesce(col("pos_qty"), lit(0.0)))
     val wt = Window.partitionBy("ticker").orderBy("rn")

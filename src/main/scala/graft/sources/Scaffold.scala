@@ -20,10 +20,12 @@ import java.util.concurrent.ConcurrentHashMap
   *  - a miss or an invalid hit builds under a lock held for that key
   *    only, so concurrent first calls build once and the others wait
   *    for the value; the hit path takes no lock. `serialBuilds = false`
-  *    drops that lock for [[DerivedStore]]'s file lists alone: its
+  *    drops that lock for [[DerivedStore]]'s file lists, whose
   *    concurrent builders, in one JVM or several, converge through the
   *    store's conditional commit, and a builder may not wait on another
-  *    caller of the same key (AdjacencyStoreSpec's CAS race);
+  *    caller of the same key (AdjacencyStoreSpec's CAS race); and for
+  *    [[SessionFrames]], whose per-session memo the JVM-wide locks
+  *    would otherwise hold past its session;
   *  - a build that throws is not memoized, and a directory allocated
   *    for it by [[inDir]] is deleted. A scaffold deletes nothing it did
   *    not allocate.
@@ -65,6 +67,9 @@ final class Scaffold[K, V](isValid: V => Boolean, serialBuilds: Boolean = true) 
 
   /** Forget every value, as a fresh JVM would (specs). */
   def clear(): Unit = memo.clear()
+
+  /** Number of memoized values (specs). */
+  def size: Int = memo.size
 }
 
 object Scaffold {

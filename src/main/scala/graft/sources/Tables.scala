@@ -29,9 +29,10 @@ import org.apache.spark.sql.types.StructType
   * once per (path, listing, parquet confs) and reads with it, so
   * building a query launches no job. Any rewritten file or changed conf
   * is a new key and is inferred again. The resolved frame itself (for
-  * [[events]], the normalized one) is memoized under the same key and
-  * the session, so a request that reads one table several times lists
-  * it, but resolves and analyzes it only once per session.
+  * [[events]], the normalized one) is memoized in the session's
+  * [[SessionFrames]] under the same key, so a request that reads one
+  * table several times lists it, but resolves and analyzes it only once
+  * per session.
   */
 object Tables {
 
@@ -70,23 +71,25 @@ object Tables {
 
   /** A fixture table, read with its memoized schema (see `schemas`). */
   def raw(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    resolved(spark, sfDir, name, rawFrames)(identity)
+    resolved(spark, sfDir, name, "raw")(identity)
 
-  /** `f` over the fixture table `name`, served from `site` while the
-    * table's [[SchemaKey]] is unchanged. The frame's relation carries the
-    * listing and the confs it was resolved with, which are the key, and
-    * its session, which is the key's other half: a frame is only served
-    * to the session that resolved it, never to another session with its
-    * own confs and catalog. Memoized frames keep their session alive;
-    * a JVM holds a handful of sessions, and one frame per fixture each. */
-  private def resolved(spark: SparkSession, sfDir: String, name: String,
-                       site: Scaffold[(SchemaKey, SparkSession), DataFrame])
+  /** `f` over the fixture table `name`, served from the session's
+    * [[SessionFrames]] while the table's [[SchemaKey]] and the session's
+    * [[analysisConfs]] are unchanged. The frame's relation carries the
+    * listing and the parquet confs it was resolved with, and its
+    * analyzed casts the time zone and ANSI mode of the session at that
+    * time: together they are the key. A frame is only served to the
+    * session that resolved it, never to another session with its own
+    * confs and catalog. */
+  private def resolved(spark: SparkSession, sfDir: String, name: String, kind: String)
                       (f: DataFrame => DataFrame): DataFrame = {
     val path = s"$sfDir/$name.parquet"
     schemaKey(spark, path) match {
-      case Some(key) => site.once((key, spark)) {
-        f(spark.read.schema(schemas.once(key)(spark.read.parquet(path).schema)).parquet(path))
-      }
+      case Some(key) =>
+        def read =
+          f(spark.read.schema(schemas.once(key)(spark.read.parquet(path).schema)).parquet(path))
+        SessionFrames.of(spark)
+          .fold(read)(_.once(s"$kind:$path", (key, analysisConfs(spark)))(read))
       // missing or empty: the plain read raises its usual error
       case None => f(spark.read.parquet(path))
     }
@@ -105,9 +108,10 @@ object Tables {
 
   private val schemas = Scaffold.values[SchemaKey, StructType]
 
-  /** Resolved frames of [[raw]] and normalized ones of [[events]]. */
-  private val rawFrames = Scaffold.values[(SchemaKey, SparkSession), DataFrame]
-  private val eventFrames = Scaffold.values[(SchemaKey, SparkSession), DataFrame]
+  /** The session confs analysis bakes into a frame's expressions
+    * ([[normalizeTs]]'s casts): the time zone and the ANSI eval mode. */
+  private def analysisConfs(spark: SparkSession): Seq[String] =
+    Seq("spark.sql.session.timeZone", "spark.sql.ansi.enabled").map(spark.conf.get)
 
   private def schemaKey(spark: SparkSession, path: String): Option[SchemaKey] = {
     val p = new Path(path)
@@ -197,7 +201,7 @@ object Tables {
     * DuckDB), whichever physical type the parquet carries. */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    resolved(spark, sfDir, "events", eventFrames)(normalizeTs)
+    resolved(spark, sfDir, "events", "events")(normalizeTs)
   }
 
   /** The reference's `trades` ledger (db.py:40-49) re-expressed over

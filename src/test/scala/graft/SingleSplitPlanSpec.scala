@@ -52,6 +52,36 @@ class SingleSplitPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
+  test("a one-split table hint-joined to a split table: no scan is wrapped, the split side keeps its reducers") {
+    val dir = graft.sources.TempDirs.create("graft_spec_mixed_split")
+    Tables.lineitem(spark, sf()).repartition(4).write.parquet(s"$dir/lineitem")
+    val fact = spark.read.parquet(s"$dir/lineitem")
+    val dim = Tables.orders(spark, sf()) // one file of a few KB
+    val joined = fact.join(dim.hint("SHUFFLE_MERGE"), col("l_orderkey") === col("o_orderkey"))
+    withConfs("spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+      val (plan, _) = counted(joined)
+      assert(collect(plan) { case w: SingleSplitScanExec => w }.isEmpty, plan.toString)
+      val smj = collect(plan) { case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j }
+      assert(smj.size == 1, plan.toString)
+      // each join side is hash-shuffled to the same count, more than one
+      val reducers = shuffles(plan).map(_.outputPartitioning).collect {
+        case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning => h.numPartitions
+      }
+      assert(reducers.size == 2 && reducers.forall(_ > 1), s"$reducers\n$plan")
+    }
+    assert(joined.count() == fact.join(dim, col("l_orderkey") === col("o_orderkey")).count())
+  }
+
+  test("q11 hints its position join as a broadcast only over one-split inputs") {
+    val pos = graft.queries.DashboardQueries.positionSeries(spark, sf())
+    assert(PlanSingleSplitScans.inputsReadAsOneSplit(pos.queryExecution.analyzed))
+    assert(!withSplitInputs(PlanSingleSplitScans.inputsReadAsOneSplit(pos.queryExecution.analyzed)))
+    def broadcastHints = SparkEntry.queries("q11_twr_index")(spark, sf()).queryExecution.analyzed
+      .collect { case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
+        if h.hints.strategy.contains(org.apache.spark.sql.catalyst.plans.logical.BROADCAST) => h }.size
+    assert(broadcastHints == withSplitInputs(broadcastHints) + 1)
+  }
+
   private val dashboard =
     SparkEntry.queries.keys.filter(_.matches("q(0[1-9]|1[0-5])_.*")).toSeq.sorted
 
@@ -115,6 +145,8 @@ class SingleSplitPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
+  // micro-batches never run under adaptive execution, the only place
+  // post-planner rules are applied, so their plans keep every exchange
   test("a stateful stream resumes on its checkpoint; micro-batch plans are not rewritten") {
     import spark.implicits._
     val tmp = graft.sources.TempDirs.create("graft_spec_single_split")

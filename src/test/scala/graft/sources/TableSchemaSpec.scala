@@ -1,5 +1,6 @@
 package graft.sources
 
+import java.lang.ref.WeakReference
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.nio.file.attribute.FileTime
 import java.util.concurrent.{CountDownLatch, Executors}
@@ -9,7 +10,7 @@ import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.SparkThrowable
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -19,8 +20,10 @@ import graft.SparkSpec
   * is inferred by one Spark job per (path, listing, parquet confs) and
   * then served with no job, it equals what a plain read infers, and a
   * rewritten file, a changed conf or a missing path never gets a stale
-  * schema or frame; a frame is resolved once per key and session. Every test works on a fresh copy of the fixture, so its keys
-  * are cold and the fixture itself is never written. */
+  * schema or frame; a frame is resolved once per key in the session's own
+  * memo, which a new key replaces and which no other session sees. Every
+  * test works on a fresh copy of the fixture, so its keys are cold and
+  * the fixture itself is never written. */
 class TableSchemaSpec extends SparkSpec {
 
   private val tables = Seq("customer", "documents", "embeddings", "events",
@@ -108,20 +111,72 @@ class TableSchemaSpec extends SparkSpec {
     assert(!(theirs eq events) && (theirs.sparkSession eq other))
     assert(Tables.events(other, dir) eq theirs)
     assert(Tables.events(spark, dir) eq events)
-    // a changed parquet conf is a new frame; the restored conf the old one
+    // a changed parquet conf is a new frame, which replaces the table's
+    // entry: the restored conf resolves again, to an equal frame
     val key = "spark.sql.parquet.binaryAsString"
     val prev = spark.conf.getAll.get(key)
     spark.conf.set(key, (!spark.conf.get(key).toBoolean).toString)
     try assert(!(Tables.raw(spark, dir, "orders") eq orders))
     finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-    assert(Tables.raw(spark, dir, "orders") eq orders)
+    val restored = Tables.raw(spark, dir, "orders")
+    assert(!(restored eq orders) && restored.schema == orders.schema)
+    assert(Tables.raw(spark, dir, "orders") eq restored)
+    val orders2 = restored
     // a rewritten file (here: a new modification time) is a new frame
     val path = Paths.get(dir, "orders.parquet")
     Files.setLastModifiedTime(path,
       FileTime.fromMillis(Files.getLastModifiedTime(path).toMillis + 60000L))
     val rewritten = Tables.raw(spark, dir, "orders")
-    assert(!(rewritten eq orders))
+    assert(!(rewritten eq orders2))
     assert(rewritten.count() == orders.count())
+  }
+
+  test("a changed session time zone or ANSI mode resolves the events frame again") {
+    val dir = freshCopy()
+    val other = spark.newSession()
+    val events = Tables.events(other, dir)
+    Seq("spark.sql.session.timeZone" -> "America/New_York",
+        "spark.sql.ansi.enabled" -> (!other.conf.get("spark.sql.ansi.enabled").toBoolean).toString)
+      .foreach { case (k, v) =>
+        val prev = other.conf.get(k)
+        other.conf.set(k, v)
+        try {
+          val changed = Tables.events(other, dir)
+          assert(!(changed eq events), k)
+          assert(Tables.events(other, dir) eq changed, k)
+        } finally other.conf.set(k, prev)
+      }
+  }
+
+  /** Builds q161 (which builds on a session of its own) `n` times: a
+    * weak reference to each build's session and that session's memo
+    * size. Nothing else here keeps a build or its session. */
+  private def q161Builds(dir: String, n: Int): Seq[(WeakReference[SparkSession], Int)] =
+    (1 to n).map { _ =>
+      val s = graft.SparkEntry.queries("q161_runtime_filter_join")(spark, dir).sparkSession
+      (new WeakReference(s), SessionFrames.of(s).get.size)
+    }
+
+  test("a session's frame memo holds one frame per table; repeated q161 builds add none and pin no session") {
+    val dir = freshCopy()
+    val frames = SessionFrames.of(spark).get
+    Tables.orders(spark, dir); Tables.lineitem(spark, dir)
+    val before = frames.size
+    val builds = q161Builds(dir, 3)
+    assert(frames.size == before)
+    assert(builds.map(_._2) == Seq(2, 2, 2), "orders and lineitem, once each")
+    // a rewritten table replaces its entry instead of adding one
+    val path = Paths.get(dir, "orders.parquet")
+    Files.setLastModifiedTime(path,
+      FileTime.fromMillis(Files.getLastModifiedTime(path).toMillis + 60000L))
+    Tables.orders(spark, dir)
+    assert(frames.size == before)
+    // no JVM-wide memo holds a build's session
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (builds.exists(_._1.get != null) && System.nanoTime() < deadline) {
+      System.gc(); Thread.sleep(100)
+    }
+    assert(builds.forall(_._1.get == null), "a q161 session is still reachable")
   }
 
   test("a missing table throws the same error as a plain read") {
